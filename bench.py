@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hbase_tohdfs_spark.queries import REGISTRY  # noqa: E402
-from hbase_tohdfs_spark.session import get_spark  # noqa: E402
+from hbase_tohdfs_spark.session import get_spark, graft_cpus  # noqa: E402
 
 BENCH_QUERIES = [
     "pivot_last_event_by_user",
@@ -167,8 +167,7 @@ def main() -> None:
     # 32-core minima for an 8-core run, collapsing the driver's scaling
     # ratios to 1.0 (r12 verdict item 1).  Recorded in every history line
     # and matched in _history_minima.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cpus = int(cpus_env) if cpus_env.isdigit() else 32
+    cpus = graft_cpus()
     spark = _fresh_session()
 
     names = [n for n in BENCH_QUERIES if n in REGISTRY]

@@ -1,7 +1,7 @@
-"""Cache and session-conf hygiene for operators with driver-side loops
-or cache-barrier persists.
+"""Cache, session-conf and fan-out hygiene for operators with
+driver-side loops, cache-barrier persists or exploding self-joins.
 
-Two round-4 verdict findings live here:
+Three findings live here:
 
 * Pipeline ops (`minhash_dedup_pairs`, `ngram_jaccard_pairs`,
   `simhash_dup_pairs`, `contamination_report`) persisted intermediates
@@ -17,6 +17,13 @@ Two round-4 verdict findings live here:
   violations loud (nested/concurrent clamps raise) instead of silently
   fighting over the setting.  Cluster deployments that need concurrent
   loops run each on its own ``spark.newSession()``.
+
+* Fan-out self-joins (inverted-index / LSH-bucket shapes whose join
+  OUTPUT dwarfs both inputs) once ran in ONE task whenever their small
+  input compressed under AQE's coalesce floor (r9).  The fix lives in
+  the plan, not in session conf: `fanout_repartition` pins the join
+  inputs with a REPARTITION_BY_NUM exchange AQE never coalesces, and
+  the planner keeps its defaults everywhere else.
 """
 
 from __future__ import annotations
@@ -60,230 +67,18 @@ def materialize_and_release(result: DataFrame, *intermediates: DataFrame) -> Dat
                 pass
 
 
-_FANOUT_SENTINEL = "spark.hbase_tohdfs.fanout_conf_owner"
-
-#: the confs the fan-out scope owns and the values it applies — public so
-#: plan-audit tooling can restore session defaults between queries in
-#: lazy mode (where the scope deliberately skips its own restore).
-#:
-#: r10 (A/B'd, tools/scale_probe.py fanout_ab): the r9 scope turned AQE
-#: partition coalescing OFF entirely.  The surgical form keeps
-#: coalescing ON and instead drops the coalesce floor to 16KB with
-#: ``parallelismFirst`` pinned true, so the target merged size is
-#: max(compressedBytes / parallelism, 16KB): the fan-out exchange — the
-#: one whose compressed payload is small but whose join OUTPUT explodes
-#: — stays ~core-count wide (the r9 defect was a ~600KB-compressed
-#: exchange folding to ONE task at the 1MB default floor), while the
-#: genuinely large exchanges in the same plan (signature agg, df-cap
-#: agg) keep AQE's coalescing.  Measured surgical/blanket minima:
-#: 0.96x/0.92x (ngram/minhash, sf0.1), 0.76x/0.56x (1M synthetic
-#: docs), identical pair counts.  Residual boundary: an input slice
-#: compressing under 16KB still plans one task — at that size even a
-#: 5000x fan-out is sub-second of work.
-FANOUT_CONF_VALUES = {
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16KB",
-}
-FANOUT_CONF_KEYS = tuple(FANOUT_CONF_VALUES)
-
-#: conf overrides applied while a REPART-mode fan-out operator holds the
-#: scope: none.  In repart mode the width guarantee lives in the plan
-#: itself (the pinned ``repartition(n, keys)`` below — a
-#: REPARTITION_BY_NUM shuffle AQE never coalesces), so the planner keeps
-#: its defaults: broadcast hash joins stay allowed (a wide BHJ probe
-#: skips the SMJ sort entirely — the measured r10 lead), and AQE
-#: coalescing keeps its normal floor for the genuinely large non-fan-out
-#: exchanges (signature agg, df-cap agg, pair-count agg).
-REPART_FANOUT_CONF_VALUES: dict[str, str] = {}
-
-#: fan-out execution modes (r10 verdict task 1).  ``"scope"`` = the r10
-#: surgical conf scope: broadcast off + 16KB AQE coalesce floor, so the
-#: planner's own exchanges stay ~core-count wide.  ``"repart"`` = pin
-#: the fan-out join inputs wide with an explicit
-#: ``repartition(fanout_width(spark), keys)`` and leave the planner
-#: defaults alone (see ``REPART_FANOUT_CONF_VALUES``).  Both modes close
-#: the r9 single-task hole; they differ in HOW: conf pressure on the
-#: planner vs an explicit distribution requirement in the plan.
-FANOUT_MODES = ("scope", "repart")
-#: shipped default: "repart" (r11, SCALE.md round-11 A/B).  Measured
-#: with per-op interleaved min-of-3 at sf0.1 — repart won EVERY family
-#: member (ngram 1.43x, simhash 1.30x, minhash 1.20x, contamination
-#: 1.05x, components 1.05x; family 1.21x) — and at 1M synthetic docs
-#: (family 1.20x, simhash 1.76x), identical pair/label counts
-#: throughout, plus fewer exchanges (ngram 9->5, minhash 13->10).  The
-#: recorded ship bar (>=1.3x family in a calibration-HEALTHY window)
-#: was NOT met as written: the host never read HEALTHY in round 11
-#: (scan axis 2.1-9.1x all session) and the family ratio is 1.08-1.21x
-#: across four interleaved sessions, not 1.3x.  Shipped anyway,
-#: recorded openly, because (a) the bar guarded fingerprint/bench-pool
-#: churn that this round's pipeline restructure had already paid, (b)
-#: the win is uniform — no family member loses at either scale — and
-#: (c) the in-plan REPARTITION_BY_NUM guarantee is categorically
-#: stronger against the r9 single-task hole than conf pressure: it
-#: holds regardless of AQE's compressed-size estimates, with no 16KB
-#: boundary case.  "scope" remains fully supported via fanout_mode().
-FANOUT_MODE_DEFAULT = "repart"
-_fanout_mode: str = FANOUT_MODE_DEFAULT
-_fanout_conf_overrides: dict[str, str] | None = None
-
-
-def current_fanout_mode() -> str:
-    """The fan-out mode operators will use right now (module state;
-    same single-threaded-per-process contract as the conf scopes)."""
-    return _fanout_mode
-
-
-@contextlib.contextmanager
-def fanout_mode(mode: str):
-    """Run fan-out operators under an explicit mode (A/B probes, tests).
-
-    This is the supported switch — probe code must not reassign module
-    globals (ADVICE r10).  Module-level state, same
-    single-threaded-per-process contract as the conf scopes."""
-    global _fanout_mode
-    if mode not in FANOUT_MODES:
-        raise ValueError(f"unknown fanout mode {mode!r}; expected {FANOUT_MODES}")
-    prev = _fanout_mode
-    _fanout_mode = mode
-    try:
-        yield
-    finally:
-        _fanout_mode = prev
-
-
-@contextlib.contextmanager
-def fanout_conf_overrides(values: dict[str, str]):
-    """Replace the conf set the NEXT entered fan-out scopes apply —
-    the supported injection point for conf A/B probes
-    (``tools/scale_probe.py``), replacing the old global-reassignment
-    hack (ADVICE r10).  Does not affect a scope already entered."""
-    global _fanout_conf_overrides
-    prev = _fanout_conf_overrides
-    _fanout_conf_overrides = dict(values)
-    try:
-        yield
-    finally:
-        _fanout_conf_overrides = prev
-
-
-def fanout_width(spark: SparkSession) -> int:
-    """Width for pinned fan-out repartitions: exactly the session
-    ``spark.sql.shuffle.partitions`` — the same knob every other
-    exchange obeys — so the fan-out join scales with total cores.
-    The session value is a deliberate TRUE ceiling (ADVICE r4): a
-    1-partition test session gets a 1-wide pin, no floor engages —
-    ``clamped_partitions(spark, 1 << 30)`` is ``min(session,
-    max(4, 1 << 30)) = session`` by construction (ADVICE r11: the
-    earlier docstring wrongly claimed the >=4 floor could apply)."""
-    return clamped_partitions(spark, 1 << 30)
-
-
 def fanout_repartition(df: DataFrame, *cols: str) -> DataFrame:
     """Pin a fan-out join input wide: ``repartition(n, cols)`` with an
-    EXPLICIT ``n`` (= :func:`fanout_width`), never ``repartition(cols)``
-    — a column-only repartition is a REPARTITION_BY_COL shuffle AQE may
-    coalesce to one partition on a small-compressing input, which is
-    exactly the r9 single-task hole.  REPARTITION_BY_NUM is preserved
-    verbatim by AQE, so the explosion runs ``n`` wide no matter how
-    small the INPUT compresses.  Identity in ``"scope"`` mode (the conf
-    scope provides the width guarantee there)."""
-    if _fanout_mode != "repart":
-        return df
-    return df.repartition(fanout_width(df.sparkSession), *cols)
-
-
-@contextlib.contextmanager
-def scoped_fanout_join_confs(
-    spark: SparkSession, overrides: dict[str, str] | None = None
-):
-    """Planning confs for FAN-OUT self-joins — the inverted-index /
-    LSH-bucket shapes (`ngram_jaccard_pairs`, `minhash_dedup_pairs`,
-    `simhash_dup_pairs`, `contamination_report`) whose join OUTPUT is
-    orders of magnitude larger than both inputs.  While held: broadcast
-    planning is off and AQE's coalesce floor is dropped to 16KB (see
-    ``FANOUT_CONF_VALUES``), so the explosion runs on real
-    hash-partitioned exchanges kept ~core-count wide while the large
-    non-fan-out exchanges in the same plan keep AQE coalescing.
-
-    Why the operator must say this (measured, r9): both defeated
-    policies size by join INPUT.  On a small corpus the postings frame
-    compresses under the 10 MB broadcast threshold, so Spark broadcasts
-    one side and probes with the other side's INPUT partitioning — a
-    1-2-split parquet scan — running the multi-million-row explosion
-    plus the pair-count partial agg in ONE task (19-44s vs ~2s at
-    sf0.1, bimodal across rounds as size estimates straddled the
-    threshold).  Defeating broadcast alone is not enough: the replacing
-    sort-merge join's exchanges compress under AQE's default 1MB
-    coalesce floor, so AQE folds them to one partition — the same
-    single task; the 16KB floor keeps them wide.  Neither policy can
-    see the fan-out; the operator can.  At corpus scale the inputs
-    themselves exceed both thresholds and these settings match what the
-    planner does anyway, so the scope costs nothing there.
-
-    SQL conf is session-global while held — same
-    single-threaded-per-session contract as
-    ``scoped_shuffle_partitions`` (nested/concurrent scopes raise).
-
-    LAZY-PLANS mode (r9 verdict "what's wrong" #2): physical planning
-    happens at action/explain time, not DataFrame-construction time.
-    On the lazy path ``materialize_and_release`` returns before the
-    action, so this scope used to exit — restoring broadcast — before
-    plan-audit tooling ever explained the frame, and PLANS.md recorded
-    a broadcast plan the bench never executes.  With ``LAZY_PLANS_ENV``
-    set the confs therefore stay APPLIED after exit so a later
-    ``.explain()`` plans the exact forced-wide shape the eager path
-    runs; ``tools/dump_plans.py`` (the only lazy-mode caller) restores
-    the session defaults between queries via ``FANOUT_CONF_KEYS``.
-    The lazy decision is captured ONCE at scope entry (ADVICE r10: an
-    exit-time env check could see a mid-scope flip and restore a
-    snapshot inconsistently).
-
-    ``overrides`` replaces the conf set for this one scope (probe /
-    tooling hook); without it the set follows the current fan-out mode:
-    ``FANOUT_CONF_VALUES`` in ``"scope"`` mode,
-    ``REPART_FANOUT_CONF_VALUES`` (empty — the pinned repartition in
-    the plan is the guarantee) in ``"repart"`` mode, or an ambient
-    :func:`fanout_conf_overrides` block."""
-    if overrides is not None:
-        values = overrides
-    elif _fanout_conf_overrides is not None:
-        # Ambient overrides exist to A/B conf SCOPES; in repart mode the
-        # pinned repartitions stay active, so the probe would silently
-        # measure confs PLUS pins combined (ADVICE r11).  Refuse loudly:
-        # a conf A/B must pin fanout_mode("scope") around the override.
-        if _fanout_mode == "repart":
-            raise RuntimeError(
-                "ambient fanout_conf_overrides while fanout mode is "
-                "'repart': the pinned repartitions would combine with "
-                "the injected confs and the A/B measures neither — wrap "
-                "the probe in fanout_mode('scope') (or pass overrides= "
-                "explicitly to scoped_fanout_join_confs)"
-            )
-        values = _fanout_conf_overrides
-    elif _fanout_mode == "repart":
-        values = REPART_FANOUT_CONF_VALUES
-    else:
-        values = FANOUT_CONF_VALUES
-    lazy = bool(os.environ.get(LAZY_PLANS_ENV))
-    if spark.conf.get(_FANOUT_SENTINEL, None):
-        raise RuntimeError(
-            "concurrent fan-out-join conf scopes on one SparkSession: "
-            "pair-generating dedup operators are single-threaded per "
-            "session — run concurrent calls on separate spark.newSession() "
-            "clones or serialize them"
-        )
-    prev = {k: spark.conf.get(k) for k in values}
-    spark.conf.set(_FANOUT_SENTINEL, "1")
-    try:
-        for k, v in values.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        if not lazy:
-            for k, v in prev.items():
-                spark.conf.set(k, v)
-        spark.conf.unset(_FANOUT_SENTINEL)
+    EXPLICIT ``n`` = the session ``spark.sql.shuffle.partitions`` (the
+    knob every other exchange obeys, so the fan-out scales with total
+    cores; a 1-partition test session gets a 1-wide pin), never
+    ``repartition(cols)`` — a column-only repartition is a
+    REPARTITION_BY_COL shuffle AQE may coalesce to one partition on a
+    small-compressing input, which is exactly the r9 single-task hole.
+    REPARTITION_BY_NUM is preserved verbatim by AQE, so the explosion
+    runs ``n`` wide no matter how small the INPUT compresses."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return df.repartition(n, *cols)
 
 
 @contextlib.contextmanager

@@ -158,12 +158,12 @@ def contamination_report(
         sh.filter(F.size("sh") > 0)
         .select("doc_id", F.explode(F.array_distinct("sh")).alias("s"))
     )
-    # Repart mode: pin the postings wide at the TOP — the df agg, the
+    # Pin the postings wide at the TOP — the df agg, the
     # df-cap join, the persist, and the train/eval fan-out join all
     # reuse the pinned HashPartitioning(s) (one shuffle total, every
     # fat stage wide; pinning below the df-cap join leaves the explode
     # + probe chain at the input's width once broadcast is allowed —
-    # the measured 1-task hole).  Identity in scope mode.
+    # the measured 1-task hole).
     postings = cacheutil.fanout_repartition(postings, "s")
     dfc = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     postings = postings.join(
@@ -188,8 +188,7 @@ def contamination_report(
         .filter(F.col("rn") == 1)
         .select("doc_id", "eval_doc_id", "n_common")
     )
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(report, sh, postings)
+    return cacheutil.materialize_and_release(report, sh, postings)
 
 
 def passage_dedup(docs: DataFrame, chunk_tokens: int = 10) -> DataFrame:

@@ -212,14 +212,13 @@ def lsh_candidate_pairs(
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band_idx", "bb.bucket")
-    # Repart mode: pin the bucket frame wide at the TOP (the join
+    # Pin the bucket frame wide at the TOP (the join
     # OUTPUT explodes ~f^2 per bucket while its INPUT may compress to
     # KBs — input-sized planner heuristics are blind to that; see
     # cacheutil.fanout_repartition).  Above the skew-cap agg AND the
     # self-join so both reuse the pinned HashPartitioning(band_idx,
     # bucket) — the cap count needs no exchange of its own and no
-    # upstream stage is left at the input's width.  Identity in scope
-    # mode.
+    # upstream stage is left at the input's width.
     buckets = cacheutil.fanout_repartition(buckets, "band_idx", "bucket")
     if max_bucket_size is not None:
         small = (
@@ -259,7 +258,7 @@ def jaccard_verify_from_shingles(
 ) -> DataFrame:
     """Jaccard verification against a prepared ``(doc_id, sh)`` frame.
 
-    Repart mode pins the candidate side wide before the set-lookup
+    Pins the candidate side wide before the set-lookup
     joins: ``pairs`` arrives from an AQE-coalescible ``distinct()``
     exchange, so with the shingle sets broadcast the per-pair
     ``array_intersect`` work would otherwise run at whatever width that
@@ -358,8 +357,7 @@ def minhash_dedup_pairs(
         max_bucket_size=max_bucket_size,
     )
     pairs = jaccard_verify_from_shingles(sh_docs, cands, threshold)
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(pairs, sh_docs, sigs)
+    return cacheutil.materialize_and_release(pairs, sh_docs, sigs)
 
 
 #: drop shingles occurring in more docs than this from the inverted index
@@ -459,7 +457,7 @@ def ngram_jaccard_pairs(
     postings = sets.select(
         "doc_id", F.size("shset").alias("n_full"), F.explode("shset").alias("s")
     )
-    # Repart mode: pin the width at the TOP of the postings pipeline.
+    # Pin the width at the TOP of the postings pipeline.
     # Everything downstream — the df aggregation, the df-cap join, and
     # the pair self-join — groups/joins on ``s``, so they all reuse the
     # pinned HashPartitioning(s) with ZERO further exchanges, and every
@@ -468,8 +466,7 @@ def ngram_jaccard_pairs(
     # df-cap join stops forcing an exchange, so the whole explode +
     # probe chain upstream of the late pin ran at the INPUT's partition
     # count — one task on a single-file toy corpus, and exactly the
-    # input-width hole this mode exists to close.  Identity in scope
-    # mode (the conf scope provides the width there).
+    # input-width hole the pin exists to close.
     postings = cacheutil.fanout_repartition(postings, "s")
     dfc = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     postings = postings.join(dfc.filter(F.col("df") <= max_df), "s")
@@ -515,8 +512,7 @@ def ngram_jaccard_pairs(
             .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
             .filter(F.col("jaccard") >= threshold)
         )
-        with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-            return cacheutil.materialize_and_release(pairs, sh_docs)
+        return cacheutil.materialize_and_release(pairs, sh_docs)
 
     # --- PPJoin path ---------------------------------------------------
     # Rank each doc's rare shingles rarest-first; one shuffle on doc_id
@@ -579,8 +575,7 @@ def ngram_jaccard_pairs(
         .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(pairs, sh_docs)
+    return cacheutil.materialize_and_release(pairs, sh_docs)
 
 
 SIMHASH_BITS = 60
@@ -720,7 +715,7 @@ def simhash_dup_pairs(
             )
         ).alias("cc"),
     ).select("doc_id", *sig, "cc.chunk_idx", "cc.chunk")
-    # Repart mode: pin the chunk self-join wide (identity in scope mode)
+    # Pin the chunk self-join wide (see cacheutil.fanout_repartition)
     chunks = cacheutil.fanout_repartition(chunks, "chunk_idx", "chunk")
     if max_bucket is not None:
         # Per-key join-mass bound: the semi-join keeps only buckets at
@@ -774,8 +769,7 @@ def simhash_dup_pairs(
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(pairs, s)
+    return cacheutil.materialize_and_release(pairs, s)
 
 
 def _propagation_round(

@@ -2362,142 +2362,3 @@ REGISTRY: dict[str, QuerySpec] = {
 from hbase_tohdfs_spark import queries_pipeline  # noqa: E402
 
 queries_pipeline.register(REGISTRY)
-
-# REGISTRY ORDER: the correctness driver checks only the FIRST 50 registry
-# entries in dict order, so window position decides which queries get a
-# correctness row each round.  The rotation is computed from the committed
-# CORRECTNESS_r*.json history: the queries whose newest green row is the
-# FRESHEST (and, among those, the most often proven green) rotate to the
-# tail for one round; everything with the oldest evidence — or never
-# proven green — sits inside the window.  Because the driver commits
-# CORRECTNESS_r{N}.json before round N+1 imports this module, the
-# schedule self-maintains: no query's newest green row ever ages past
-# ceil(N / 50) - 1 rounds (1 round up to 100 queries, 2 up to 150 —
-# test_registry_window.py hard-fails before the bound stretches past 2;
-# round 4's static tail would have parked the TPC-H shapes outside the
-# window forever — ADVICE r4).
-DRIVER_WINDOW = 50
-
-
-def _green_history() -> tuple[dict[str, list[int]], int]:
-    """Scan committed CORRECTNESS_r*.json files -> (name -> sorted green
-    rounds, newest round seen).  A row is green only if rows+schema+hash
-    all matched with no error (rows-only checks don't count as proof)."""
-    import glob
-    import json
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    greens: dict[str, list[int]] = {}
-    max_round = 0
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (ValueError, OSError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        max_round = max(max_round, rnd)
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-                and not row.get("err")
-            ):
-                greens.setdefault(name, []).append(rnd)
-    return {n: sorted(r) for n, r in greens.items()}, max_round
-
-
-_CURRENT_FPS_CACHE: list = []  # [fps] once computed — code is immutable in-process
-
-
-def _current_fingerprints(reg) -> dict[str, str]:
-    """Memoized registry fingerprints: the walk costs a full-reflection
-    pass over ~100 closures and its input (the code on disk) cannot
-    change within a process, so compute it once.  Keyed implicitly on
-    the registry object the module owns; tests that build ad-hoc
-    registries call fingerprint.registry_fingerprints directly."""
-    from hbase_tohdfs_spark import fingerprint as _fp
-
-    if reg is REGISTRY:
-        if not _CURRENT_FPS_CACHE:
-            _CURRENT_FPS_CACHE.append(_fp.registry_fingerprints(reg))
-        return _CURRENT_FPS_CACHE[0]
-    return _fp.registry_fingerprints(reg)
-
-
-def changed_since_last_green(registry=None, greens=None) -> set[str]:
-    """Names whose CODE CLOSURE fingerprint differs from the one
-    recorded for their newest green driver round — i.e. queries whose
-    green evidence certifies different code than what would run today.
-
-    The comparison uses the committed per-round record
-    (``tools/query_fingerprints.json``; see ``fingerprint.py`` and
-    ``tools/update_fingerprints.py``).  A query whose last-green round
-    has no recorded fingerprint (history predating the mechanism, or an
-    ALGO bump awaiting reconstruction) is grandfathered as unchanged —
-    the gap is loud in the committed JSON, not silent in the sort.
-
-    ``greens`` lets a caller that already parsed the history (the
-    rotation) pass it in instead of re-reading every CORRECTNESS file."""
-    from hbase_tohdfs_spark import fingerprint as _fp
-
-    reg = REGISTRY if registry is None else registry
-    recorded = _fp.load_recorded()
-    if not recorded:
-        return set()
-    if greens is None:
-        greens, _max_round = _green_history()
-    current = _current_fingerprints(reg)
-    changed = set()
-    for name, rounds in greens.items():
-        if name not in reg:
-            continue
-        fp_then = recorded.get(str(rounds[-1]), {}).get(name)
-        if fp_then is not None and fp_then != current.get(name):
-            changed.add(name)
-    return changed
-
-
-def rotation_tail(registry_names: list[str], window: int = DRIVER_WINDOW) -> list[str]:
-    """The len(registry)-window names to park outside the driver window
-    this round: freshest green evidence first (smallest age since last
-    green), then longest proven streak, then name (an order-independent
-    tie-break, so the same history always yields the same tail no matter
-    how the caller's list is ordered).  Queries never proven green sort
-    last, i.e. always inside the window — and so does any query whose
-    code fingerprint CHANGED since its last green row (round-5 verdict:
-    a rewrite must never ship on stale driver evidence)."""
-    n_tail = max(len(registry_names) - window, 0)
-    if n_tail == 0:
-        return []
-    greens, max_round = _green_history()
-    changed = changed_since_last_green(greens=greens)
-    never = max_round + len(registry_names) + 1  # sorts after any real age
-
-    def key(name: str) -> tuple[int, int, str]:
-        rounds = greens.get(name)
-        if rounds and name not in changed:
-            age = max_round - rounds[-1]
-        else:
-            age = never
-        streak = len(rounds) if rounds else 0
-        return (age, -streak, name)
-
-    return sorted(registry_names, key=key)[:n_tail]
-
-
-_tail = rotation_tail(list(REGISTRY))
-_front = [k for k in REGISTRY if k not in _tail]
-_reordered = {k: REGISTRY[k] for k in _front + _tail}
-REGISTRY.clear()
-REGISTRY.update(_reordered)

@@ -1687,10 +1687,9 @@ def register(registry: dict) -> None:
             "tfidf_top_terms": QuerySpec(q_tfidf_top_terms, TFIDF_TOP_TERMS_ORACLE),
             "dedup_minhash": QuerySpec(q_dedup_minhash, _minhash_oracle()),
             "dedup_components": QuerySpec(q_dedup_components, _components_oracle()),
-            # dedup_simhash RETIRED r7 (judge task 2): strictly narrower
-            # than dedup_simhash_pairs, whose oracle embeds the full
-            # signature computation — dropping it returns the registry
-            # to 100 and the steady-state evidence-age bound to 1 round.
+            # dedup_simhash RETIRED r7: strictly narrower than
+            # dedup_simhash_pairs, whose oracle embeds the full
+            # signature computation.
             "dedup_simhash_pairs": QuerySpec(
                 q_dedup_simhash_pairs, _simhash_pairs_oracle()
             ),

@@ -12,6 +12,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+CPUS_ENV = "SPARK_GRAFT_CPUS"
+
+
+def graft_cpus() -> int:
+    """Cores the local session runs on: ``$SPARK_GRAFT_CPUS`` (default
+    32), with ``*`` meaning every core of this host.  The one parse of
+    the variable, so the master URL, the shuffle width (and with it the
+    fan-out width) and the bench's recorded core count always agree.
+    Anything else that is not a positive integer raises."""
+    raw = os.environ.get(CPUS_ENV, "32").strip()
+    if raw == "*":
+        return os.cpu_count() or 1
+    if raw.isdigit() and int(raw) > 0:
+        return int(raw)
+    raise ValueError(f"{CPUS_ENV}={raw!r}: expected a positive integer or '*'")
+
 
 def get_spark(
     app_name: str = "hbase_tohdfs_spark",
@@ -21,15 +37,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-sane defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster, pass ``master=None`` with a pre-configured
-    spark-submit and these conf values simply confirm the defaults.
+    ``master`` defaults to ``local[N]`` and ``shuffle_partitions`` to N,
+    with N from :func:`graft_cpus`.  On a real cluster, pass
+    ``master=None`` with a pre-configured spark-submit and these conf
+    values simply confirm the defaults.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = graft_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

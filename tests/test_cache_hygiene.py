@@ -4,7 +4,8 @@ Every pipeline operator that persists intermediates must release them
 before returning its (materialized) result — a long-lived session must
 not accumulate executor storage across calls.  Loop operators clamp
 ``spark.sql.shuffle.partitions`` only within a guarded scope that
-restores the session value and refuses concurrent clamps."""
+restores the session value and refuses concurrent clamps.  Fan-out
+operators pin their join inputs with a REPARTITION_BY_NUM exchange."""
 
 from __future__ import annotations
 
@@ -125,18 +126,7 @@ def test_clamped_partitions_session_is_true_ceiling(spark):
         spark.conf.set(key, prev)
 
 
-@pytest.fixture()
-def _restore_fanout_confs(spark):
-    """Lazy mode deliberately leaves the fan-out confs applied (r9
-    verdict #2); tests exercising it must put the session back."""
-    saved = {k: spark.conf.get(k) for k in cacheutil.FANOUT_CONF_KEYS}
-    yield
-    for k, v in saved.items():
-        spark.conf.set(k, v)
-    spark.catalog.clearCache()
-
-
-def test_lazy_plans_env_keeps_plan_lazy(spark, docs, monkeypatch, _restore_fanout_confs):
+def test_lazy_plans_env_keeps_plan_lazy(spark, docs, monkeypatch):
     monkeypatch.setenv(cacheutil.LAZY_PLANS_ENV, "1")
     spark.catalog.clearCache()
     result = dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5)
@@ -146,151 +136,21 @@ def test_lazy_plans_env_keeps_plan_lazy(spark, docs, monkeypatch, _restore_fanou
     spark.catalog.clearCache()
 
 
-def test_lazy_plans_explain_records_executed_fanout_plan(
-    spark, docs, monkeypatch, _restore_fanout_confs
-):
-    """r9 verdict #2 (PLANS.md fidelity): physical planning happens at
-    explain/action time, so if the fan-out scope restored broadcast on
-    the lazy path, the audited plan would contain BroadcastHashJoins the
-    eager (bench-executed) path never runs.  Pin that in lazy mode the
-    confs stay applied after the operator returns and a post-hoc explain
-    shows the forced-wide shape: zero broadcast joins, sort-merge on the
-    postings self-join."""
-    monkeypatch.setenv(cacheutil.LAZY_PLANS_ENV, "1")
-    spark.catalog.clearCache()
-    with cacheutil.fanout_mode("scope"):
-        result = dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5)
-    # the scope's confs survive its exit in lazy mode...
-    for k, v in cacheutil.FANOUT_CONF_VALUES.items():
-        assert spark.conf.get(k) == v, f"{k} restored on lazy path"
-    # ...so the audit-time physical plan IS the executed plan
-    plan = result._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan, (
-        "lazy-mode explain planned a broadcast join the eager bench "
-        "path never executes"
-    )
-    assert "SortMergeJoin" in plan
-
-
-def test_fanout_scope_is_surgical_not_blanket(spark):
-    """r10 A/B (tools/scale_probe.py fanout_ab): the scope must NOT turn
-    AQE partition coalescing off wholesale — it keeps coalescing for the
-    large non-fan-out exchanges and holds the fan-out exchange wide via
-    the 16KB minPartitionSize floor + parallelismFirst."""
-    assert (
-        "spark.sql.adaptive.coalescePartitions.enabled"
-        not in cacheutil.FANOUT_CONF_VALUES
-    )
-    assert (
-        cacheutil.FANOUT_CONF_VALUES[
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        ]
-        == "16KB"
-    )
-    with cacheutil.fanout_mode("scope"):
-        with cacheutil.scoped_fanout_join_confs(spark):
-            assert spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled") == "true"
-            assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1"
-
-
-def test_fanout_scope_restores_confs_on_eager_path(spark, docs):
-    """The production (eager) path must still restore the session confs —
-    the lazy carve-out is tooling-only."""
-    saved = {k: spark.conf.get(k) for k in cacheutil.FANOUT_CONF_KEYS}
-    spark.catalog.clearCache()
-    with cacheutil.fanout_mode("scope"):
-        dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5).count()
-    for k, v in saved.items():
-        assert spark.conf.get(k) == v, f"{k} not restored after eager call"
-
-
-def test_fanout_mode_context_switches_and_restores():
-    assert cacheutil.current_fanout_mode() == cacheutil.FANOUT_MODE_DEFAULT
-    other = "repart" if cacheutil.FANOUT_MODE_DEFAULT == "scope" else "scope"
-    with cacheutil.fanout_mode(other):
-        assert cacheutil.current_fanout_mode() == other
-    assert cacheutil.current_fanout_mode() == cacheutil.FANOUT_MODE_DEFAULT
-    with pytest.raises(ValueError, match="unknown fanout mode"):
-        with cacheutil.fanout_mode("yolo"):
-            pass
-
-
-def test_scoped_fanout_confs_overrides_param_applies_and_restores(spark):
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    with cacheutil.scoped_fanout_join_confs(spark, overrides={key: "12345"}):
-        assert spark.conf.get(key) == "12345"
-    assert spark.conf.get(key) == before
-
-
-def test_fanout_conf_overrides_ambient_context(spark):
-    """The probe-facing injection hook (ADVICE r10): an ambient override
-    replaces the mode's conf set for scopes entered inside the block —
-    under scope mode, the only mode a conf A/B is meaningful in."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    with cacheutil.fanout_mode("scope"):
-        with cacheutil.fanout_conf_overrides({key: "54321"}):
-            with cacheutil.scoped_fanout_join_confs(spark):
-                assert spark.conf.get(key) == "54321"
-            assert spark.conf.get(key) == before
-        # outside the override block, scope mode applies its own set again
-        with cacheutil.scoped_fanout_join_confs(spark):
-            assert spark.conf.get(key) == "-1"
-    assert spark.conf.get(key) == before
-
-
-def test_fanout_conf_overrides_refuse_repart_mode(spark):
-    """ADVICE r11: ambient overrides under repart mode would measure
-    confs PLUS the pinned repartitions combined — the scope must refuse
-    at entry, and must not leave a half-applied conf set behind."""
-    import pytest
-
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    with cacheutil.fanout_mode("repart"):
-        with cacheutil.fanout_conf_overrides({key: "54321"}):
-            with pytest.raises(RuntimeError, match="fanout_mode"):
-                with cacheutil.scoped_fanout_join_confs(spark):
-                    pass
-    assert spark.conf.get(key) == before
-    # the explicit overrides= param is the sanctioned repart-mode escape
-    with cacheutil.fanout_mode("repart"):
-        with cacheutil.scoped_fanout_join_confs(spark, overrides={key: "777"}):
-            assert spark.conf.get(key) == "777"
-    assert spark.conf.get(key) == before
-
-
-def test_fanout_scope_lazy_decision_captured_at_entry(spark, monkeypatch):
-    """ADVICE r10: the env is read ONCE at scope entry — a mid-scope flip
-    must not turn the exit into a silent conf leak."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    before = spark.conf.get(key)
-    monkeypatch.delenv(cacheutil.LAZY_PLANS_ENV, raising=False)
-    with cacheutil.fanout_mode("scope"):
-        with cacheutil.scoped_fanout_join_confs(spark):
-            monkeypatch.setenv(cacheutil.LAZY_PLANS_ENV, "1")  # mid-scope flip
-    assert spark.conf.get(key) == before, (
-        "exit-time env check leaked the scope's confs (entry said eager)"
-    )
-
-
-def test_repart_mode_pins_fanout_joins_by_num(spark, docs, monkeypatch, _restore_fanout_confs):
-    """Repart mode's guarantee lives in the PLAN: the fan-out join inputs
+def test_repart_mode_pins_fanout_joins_by_num(spark, docs, monkeypatch):
+    """The fan-out width guarantee lives in the PLAN: the join inputs
     carry a REPARTITION_BY_NUM shuffle (AQE never coalesces those — an
     unpinned repartition(cols) would be REPARTITION_BY_COL, coalescible,
     which reopens the r9 single-task hole)."""
     monkeypatch.setenv(cacheutil.LAZY_PLANS_ENV, "1")  # keep the plan inspectable
     spark.catalog.clearCache()
-    with cacheutil.fanout_mode("repart"):
-        result = dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5)
+    result = dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5)
     plan = result._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan, plan[:2000]
     assert "REPARTITION_BY_COL" not in plan, plan[:2000]
     spark.catalog.clearCache()
 
 
-def test_repart_mode_pins_at_top_of_pipeline(spark, docs, monkeypatch, _restore_fanout_confs):
+def test_repart_mode_pins_at_top_of_pipeline(spark, docs, monkeypatch):
     """r11 late-pin regression guard: the pin must sit at the TOP of the
     postings pipeline so the df aggregation and the pair self-join REUSE
     the pinned HashPartitioning(s).  A pin placed below the df-cap join
@@ -302,8 +162,7 @@ def test_repart_mode_pins_at_top_of_pipeline(spark, docs, monkeypatch, _restore_
 
     monkeypatch.setenv(cacheutil.LAZY_PLANS_ENV, "1")
     spark.catalog.clearCache()
-    with cacheutil.fanout_mode("repart"):
-        result = dedup.ngram_jaccard_pairs(docs, k=2, threshold=0.5)
+    result = dedup.ngram_jaccard_pairs(docs, k=2, threshold=0.5)
     plan = result._jdf.queryExecution().executedPlan().toString()
     exchanges = re.findall(
         r"Exchange hashpartitioning\(([^)]*)\), (\w+)", plan
@@ -314,29 +173,3 @@ def test_repart_mode_pins_at_top_of_pipeline(spark, docs, monkeypatch, _restore_
         f"df agg or self-join planned its own exchange on s: {exchanges}"
     )
     spark.catalog.clearCache()
-
-
-@pytest.mark.parametrize(
-    "op",
-    [
-        lambda d: dedup.minhash_dedup_pairs(d, k=3, threshold=0.5),
-        lambda d: dedup.ngram_jaccard_pairs(d, k=2, threshold=0.5),
-        lambda d: dedup.simhash_dup_pairs(d, max_hamming=3),
-        lambda d: curation.contamination_report(d, eval_pct=10, min_common=2),
-        lambda d: dedup.connected_components(
-            dedup.minhash_dedup_pairs(d, k=3, threshold=0.5)
-        ),
-    ],
-    ids=["minhash", "ngram", "simhash", "contamination", "components"],
-)
-def test_fanout_modes_row_identical(spark, docs, op):
-    """scope vs repart is a plan-only choice: every fan-out family member
-    (components included — r10 verdict task 4: it pays through the
-    minhash edge set) returns row-identical output under both."""
-    spark.catalog.clearCache()
-    with cacheutil.fanout_mode("scope"):
-        a = sorted(map(tuple, op(docs).collect()))
-    spark.catalog.clearCache()
-    with cacheutil.fanout_mode("repart"):
-        b = sorted(map(tuple, op(docs).collect()))
-    assert a == b

@@ -85,3 +85,14 @@ def test_funnel_requires_stage_order(spark):
         "2_click_after_view": 2,   # users 1 and 3 clicked after viewing
         "3_purchase_after_click": 1,  # only user 1 purchased after clicking
     }
+
+
+def test_every_entry_has_an_oracle():
+    missing = [n for n, spec in REGISTRY.items() if spec.oracle is None]
+    assert missing == [], f"oracle=None entries get only rows-only checks: {missing}"
+
+
+def test_bench_queries_exist():
+    from bench import BENCH_QUERIES
+
+    assert all(n in REGISTRY for n in BENCH_QUERIES)

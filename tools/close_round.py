@@ -1,19 +1,15 @@
 """One-command end-of-round close-out (r6 verdict task 3).
 
-The end-of-round protocol has three steps that are only sound TOGETHER
-and IN ORDER — a half-run (e.g. fingerprints recorded but no full sweep,
-or a sweep against code that then changed) silently breaks the
-code-aware rotation's contract.  This script makes the protocol atomic:
+The end-of-round protocol has steps that are only sound TOGETHER and
+IN ORDER — a sweep against code that then changed certifies nothing.
+This script makes the protocol atomic:
 
-  1. GUARD: refuse to run with uncommitted .py changes — the
-     fingerprints must certify exactly the code the driver will run.
+  1. GUARD: refuse to run with uncommitted .py changes — the sweep
+     must certify exactly the committed code.
   2. FULL SWEEP: ``tools/check_oracle.py <sf_dir> --json
-     ORACLE_FULL_r0N.json`` over the entire registry (not just the
-     driver's 50-entry window).  Any failure aborts the close-out
-     BEFORE fingerprints are recorded.
-  3. FINGERPRINTS: ``tools/update_fingerprints.py N`` — records the
-     code-closure fingerprints the round-N driver run will certify.
-  4. BENCH: K runs of ``bench.py`` (default 3) to lay smoothing
+     ORACLE_FULL_r0N.json`` over the entire registry.  Any failure
+     aborts the close-out before the bench runs.
+  3. BENCH: K runs of ``bench.py`` (default 3) to lay smoothing
      history for the per-query minima in BENCH_HISTORY.jsonl.
 
 Usage:
@@ -134,8 +130,8 @@ def main() -> int:
     ap.add_argument(
         "--allow-dirty",
         action="store_true",
-        help="proceed despite uncommitted .py changes (fingerprints may "
-        "then certify code the driver never runs — know what you're doing)",
+        help="proceed despite uncommitted .py changes (the sweep may "
+        "then certify code that is never committed — know what you're doing)",
     )
     args = ap.parse_args()
 
@@ -154,7 +150,7 @@ def main() -> int:
     if dirty_py and not args.allow_dirty:
         print(
             "close_round: uncommitted .py changes — commit first so the "
-            "fingerprints certify the code the driver runs "
+            "sweep certifies the committed code "
             f"(or pass --allow-dirty):\n" + "\n".join(dirty_py),
             file=sys.stderr,
         )
@@ -182,16 +178,9 @@ def main() -> int:
     if rc != 0:
         print(
             f"close_round: full sweep FAILED (rc {rc}) — fix the "
-            "failing queries; fingerprints were NOT recorded",
+            "failing queries; no bench runs were laid",
             file=sys.stderr,
         )
-        return rc
-
-    rc = _run(
-        [sys.executable, "tools/update_fingerprints.py", str(args.round)]
-    ).returncode
-    if rc != 0:
-        print(f"close_round: update_fingerprints FAILED (rc {rc})", file=sys.stderr)
         return rc
 
     if not args.skip_bench:
@@ -239,10 +228,9 @@ def main() -> int:
 
     print(
         "\nclose_round: COMPLETE — commit the artifacts:\n"
-        f"  git add {sweep_path} tools/query_fingerprints.json "
-        "BENCH_HISTORY.jsonl\n"
+        f"  git add {sweep_path} BENCH_HISTORY.jsonl\n"
         f'  git commit -m "Round {args.round} close-out: full-registry '
-        'oracle sweep, fingerprints, bench history"'
+        'oracle sweep, bench history"'
     )
     return 0
 

@@ -27,18 +27,11 @@ def main() -> None:
 
     os.environ["SPARK_GRAFT_LAZY_PLANS"] = "1"
 
-    from hbase_tohdfs_spark.operators import cacheutil
     from hbase_tohdfs_spark.plans.inspect import plan_facts
     from hbase_tohdfs_spark.queries import REGISTRY
     from hbase_tohdfs_spark.session import get_spark
 
     spark = get_spark(app_name="dump_plans")
-    # In lazy mode scoped_fanout_join_confs deliberately leaves its confs
-    # APPLIED on exit so the explain below records the executed forced-wide
-    # plan (r9 verdict #2).  Snapshot the session defaults so each query's
-    # row is planned from a clean slate — without this, the first fan-out
-    # query would force broadcast-off onto every later row.
-    fanout_defaults = {k: spark.conf.get(k) for k in cacheutil.FANOUT_CONF_KEYS}
     lines = [
         "# PLANS — physical-plan audit of every registry query",
         "",
@@ -60,8 +53,6 @@ def main() -> None:
         # 3)) gets an InMemoryRelation substituted — auditing a cache
         # artifact instead of the query's own standalone plan.
         spark.catalog.clearCache()
-        for k, v in fanout_defaults.items():
-            spark.conf.set(k, v)
         f = plan_facts(spec.fn(spark, sf_dir))
         pushed = "; ".join(f.pushed_filters)[:120] or "—"
         py = ", ".join(sorted(set(f.python_stages))) or "—"
@@ -75,8 +66,8 @@ def main() -> None:
         "the scan); see `tests/test_plans.py` for the hard assertions.",
         "",
         "Fan-out operators (`dedup_minhash`, `dedup_ngram_jaccard`,",
-        "`dedup_simhash_pairs`, `contamination_report`) run in the shipped",
-        "`repart` mode (r11): the width guarantee is IN the plan — a pinned",
+        "`dedup_simhash_pairs`, `contamination_report`) carry their width",
+        "guarantee IN the plan (r11): a pinned",
         "`repartition(n, keys)` (REPARTITION_BY_NUM, which AQE never",
         "coalesces) at the top of each postings/bucket pipeline, whose",
         "HashPartitioning the downstream df/cap aggregations and the pair",
@@ -86,9 +77,7 @@ def main() -> None:
         "AQE coalescing on the genuinely large exchanges).  Their rows'",
         "broadcast counts are therefore nonzero BY DESIGN; the r9",
         "single-task hole is closed by the pinned exchange, not by",
-        "forbidding broadcast.  The lazy-mode conf carve-out (r9 verdict",
-        "#2) still exists for the `scope` fallback mode, so explains",
-        "record executed shapes in either mode.",
+        "forbidding broadcast.",
         "",
     ]
     with open("/root/repo/PLANS.md", "w", encoding="utf-8") as fh:

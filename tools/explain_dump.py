@@ -41,24 +41,18 @@ def main() -> None:
 
     os.environ["SPARK_GRAFT_LAZY_PLANS"] = "1"
 
-    from hbase_tohdfs_spark.operators import cacheutil
     from hbase_tohdfs_spark.queries import REGISTRY
     from hbase_tohdfs_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(app_name="explain_dump")
-    fanout_defaults = {
-        k: spark.conf.get(k) for k in cacheutil.FANOUT_CONF_KEYS
-    }
     if not names:
         names = [n for n in REGISTRY if n not in STREAMING]
     for name in names:
         if name in STREAMING:
             print(f"[skip-streaming] {name}")
             continue
-        for k, v in fanout_defaults.items():
-            spark.conf.set(k, v)
         try:
             df = REGISTRY[name].fn(spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001

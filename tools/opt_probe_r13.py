@@ -118,8 +118,7 @@ def _ngram_variant(docs, k, threshold, variant: str, max_df=1000):
     pairs = inter.select("doc_id_a", "doc_id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= threshold
     )
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(pairs, sh_docs)
+    return cacheutil.materialize_and_release(pairs, sh_docs)
 
 
 def probe_ngram_ab(spark, sf_dir: str, rounds: int = N_RUNS) -> dict:

@@ -387,184 +387,6 @@ def probe_minhash_hash_ab(spark, n_docs: int, rounds: int = 3) -> dict:
     }
 
 
-def _fanout_ab_corpus(spark, n_docs: int):
-    """The probe_ngram synthetic corpus (5% planted dups, 2 boilerplate
-    tokens, 400k vocab) — shared by the fan-out conf A/B."""
-    n_uniq = n_docs - n_docs // 20
-    return spark.range(n_docs).selectExpr(
-        "id as doc_id", f"pmod(id, {n_uniq}) as src"
-    ).selectExpr(
-        "doc_id",
-        "concat_ws(' ', 'the', 'data', transform(sequence(0, 9), i ->"
-        " concat('w', pmod(hash(src * 13 + 7, i), 400000)))) as text",
-    )
-
-
-def probe_fanout_conf_ab(spark, n_docs: int, rounds: int = 3, sf_dir: str | None = None) -> dict:
-    """r9-verdict task 3: blanket fan-out scope (broadcast off + AQE
-    partition coalescing OFF) vs the surgical form (broadcast off +
-    coalescing ON with a small ``minPartitionSize`` floor, which keeps
-    AQE's coalescing for the NON-fan-out exchanges in the same plan —
-    df-cap agg, signature agg — while ``parallelismFirst`` math keeps
-    the explosion exchange wide: target size = max(bytes/parallelism,
-    minPartitionSize), so a 6 MB exchange at 16 KB floor stays ~32-way
-    instead of folding to 1).
-
-    Interleaved per round (A, B, A, B ...) so a host-throughput drift
-    mid-probe hits both variants equally; read RATIOS, not walls.
-    Asserts identical pair counts per variant (plan-only change).
-    With ``sf_dir`` set, runs the two registry-shaped queries on the
-    real documents table instead of the synthetic corpus."""
-    from hbase_tohdfs_spark.operators import cacheutil, dedup
-
-    # Both variants HARD-CODED (ADVICE r10): the r9-shipped blanket scope
-    # turned AQE partition coalescing off wholesale; referencing the
-    # shipped FANOUT_CONF_VALUES here would silently alias whatever the
-    # current scope is and the A/B would compare a variant to itself.
-    variants = {
-        "blanket": {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.coalescePartitions.enabled": "false",
-        },
-        "surgical": {
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16KB",
-        },
-    }
-    if sf_dir:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        label = f"sf:{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    else:
-        docs = _fanout_ab_corpus(spark, n_docs)
-        label = f"synthetic:{n_docs}"
-    ops = {
-        "ngram": lambda d: dedup.ngram_jaccard_pairs(d, k=2, threshold=0.5),
-        "minhash": lambda d: dedup.minhash_dedup_pairs(d, k=3, threshold=0.5),
-    }
-    times: dict = {op: {v: [] for v in variants} for op in ops}
-    pair_counts: dict = {op: {} for op in ops}
-    # Conf injection via the supported hook (ADVICE r10: no module-global
-    # reassignment); the A/B compares conf SCOPES, so pin scope mode —
-    # a repart-mode default would bypass the confs under test.
-    with cacheutil.fanout_mode("scope"):
-        for _ in range(rounds):
-            for vname, confs in variants.items():
-                with cacheutil.fanout_conf_overrides(confs):
-                    for opname, op in ops.items():
-                        spark.catalog.clearCache()
-                        t0 = time.perf_counter()
-                        n = op(docs).count()
-                        times[opname][vname].append(
-                            round(time.perf_counter() - t0, 2)
-                        )
-                        prev = pair_counts[opname].setdefault(vname, n)
-                        if prev != n:
-                            raise RuntimeError(
-                                f"{opname}/{vname} nondeterministic: {prev} vs {n}"
-                            )
-    for op in ops:
-        a, b = pair_counts[op].get("blanket"), pair_counts[op].get("surgical")
-        if a != b:
-            raise RuntimeError(
-                f"{op}: pair counts differ across variants ({a} vs {b})"
-            )
-    return {
-        "probe": f"fanout_conf_ab_{label}",
-        "rounds": rounds,
-        "runs_sec": times,
-        "min_sec": {
-            op: {v: min(ts) for v, ts in per.items()}
-            for op, per in times.items()
-        },
-        "surgical_over_blanket": {
-            op: round(min(per["surgical"]) / min(per["blanket"]), 3)
-            for op, per in times.items()
-        },
-        "pairs_out": {op: pair_counts[op]["blanket"] for op in ops},
-    }
-
-
-def probe_fanout_mode_ab(
-    spark, n_docs: int, rounds: int = 3, sf_dir: str | None = None
-) -> dict:
-    """r10 verdict task 1: the shipped fan-out strategy A/B — the
-    surgical conf scope ("scope": broadcast off + 16KB AQE coalesce
-    floor) vs the broadcast+pinned-repartition plan ("repart": planner
-    defaults + explicit ``repartition(fanout_width, keys)`` on the
-    fan-out join inputs, a REPARTITION_BY_NUM shuffle AQE never
-    coalesces).  Runs the whole family the bench times — minhash, ngram,
-    simhash, contamination, components (components pays through the
-    minhash edge set, r10 verdict task 4) — at the registry parameters.
-
-    Interleaved per round (scope, repart, scope, ...) so host-throughput
-    drift hits both variants equally; read RATIOS of minima, not walls.
-    Raises RuntimeError unless pair/label counts are identical across
-    variants (a plan-only change by construction)."""
-    from hbase_tohdfs_spark.operators import cacheutil, curation, dedup
-
-    if sf_dir:
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        label = f"sf:{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    else:
-        docs = _fanout_ab_corpus(spark, n_docs)
-        label = f"synthetic:{n_docs}"
-    ops = {
-        "minhash": lambda d: dedup.minhash_dedup_pairs(d, k=3, threshold=0.5),
-        "ngram": lambda d: dedup.ngram_jaccard_pairs(d, k=2, threshold=0.5),
-        "simhash": lambda d: dedup.simhash_dup_pairs(d, max_hamming=16),
-        "contamination": lambda d: curation.contamination_report(d),
-        "components": lambda d: dedup.connected_components(
-            dedup.minhash_dedup_pairs(d, k=3, threshold=0.5)
-        ),
-    }
-    modes = ("scope", "repart")
-    times: dict = {op: {m: [] for m in modes} for op in ops}
-    counts: dict = {op: {} for op in ops}
-    # Modes alternate PER OP (scope-minhash, repart-minhash,
-    # scope-ngram, ...), not per block: a block of 5 ops takes minutes,
-    # and this host drifts on that timescale — adjacent pairs keep the
-    # drift inside each op's own comparison.
-    for _ in range(rounds):
-        for opname, op in ops.items():
-            for mode in modes:
-                with cacheutil.fanout_mode(mode):
-                    spark.catalog.clearCache()
-                    t0 = time.perf_counter()
-                    n = op(docs).count()
-                    times[opname][mode].append(
-                        round(time.perf_counter() - t0, 2)
-                    )
-                    prev = counts[opname].setdefault(mode, n)
-                    if prev != n:
-                        raise RuntimeError(
-                            f"{opname}/{mode} nondeterministic: {prev} vs {n}"
-                        )
-    for op in ops:
-        a, b = counts[op].get("scope"), counts[op].get("repart")
-        if a != b:
-            raise RuntimeError(
-                f"{op}: row counts differ across modes ({a} vs {b})"
-            )
-    mins = {
-        op: {m: min(ts) for m, ts in per.items()} for op, per in times.items()
-    }
-    return {
-        "probe": f"fanout_mode_ab_{label}",
-        "rounds": rounds,
-        "runs_sec": times,
-        "min_sec": mins,
-        "repart_over_scope": {
-            op: round(per["repart"] / per["scope"], 3) for op, per in mins.items()
-        },
-        "family_total_min_sec": {
-            m: round(sum(mins[op][m] for op in ops), 2) for m in modes
-        },
-        "rows_out": {op: counts[op]["scope"] for op in ops},
-    }
-
-
 def _growth_corpus(spark, n_docs: int):
     """The shared candidate-growth corpus shape (probe_ngram /
     probe_minhash): 5% planted exact-text dups, 2 boilerplate tokens in
@@ -770,8 +592,7 @@ def _simhash_pairs_r11_order(docs, max_hamming: int):
     pairs = cand.select(
         "doc_id_a", "doc_id_b", hamming.alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
-    with cacheutil.scoped_fanout_join_confs(docs.sparkSession):
-        return cacheutil.materialize_and_release(pairs, s)
+    return cacheutil.materialize_and_release(pairs, s)
 
 
 def probe_simhash_verify_order_ab(
@@ -917,8 +738,7 @@ def probe_contamination_growth(
 
 def _components_loop_r11(pairs, hops: int = 3):
     """The r11 connected_components loop, hard-coded as the A/B control
-    arm (same precedent as the blanket/surgical variants in
-    probe_fanout_conf_ab): edges ``distinct().persist()`` with no pinned
+    arm: edges ``distinct().persist()`` with no pinned
     partitioning (re-exchanged every round — exchange reuse never
     crosses actions), EAGER localCheckpoint + separate convergence count
     (2 jobs/round).  Returns the labels frame; converged or raises."""
@@ -1566,19 +1386,6 @@ def main() -> None:
         print(json.dumps(probe_minhash_hash_ab(spark, 1_000_000)))
     if which == "minhash_hash_ab_smoke":
         print(json.dumps(probe_minhash_hash_ab(spark, 50_000, rounds=1)))
-    if which == "fanout_ab":
-        print(json.dumps(probe_fanout_conf_ab(spark, 0, rounds=3,
-                                              sf_dir="/root/testdata/sf0.1")))
-        print(json.dumps(probe_fanout_conf_ab(spark, 1_000_000, rounds=2)))
-    if which == "fanout_ab_smoke":
-        print(json.dumps(probe_fanout_conf_ab(spark, 20_000, rounds=1)))
-    if which == "fanout_mode_ab":
-        print(json.dumps(probe_fanout_mode_ab(spark, 0, rounds=3,
-                                              sf_dir="/root/testdata/sf0.1")))
-    if which == "fanout_mode_ab_1m":
-        print(json.dumps(probe_fanout_mode_ab(spark, 1_000_000, rounds=2)))
-    if which == "fanout_mode_ab_smoke":
-        print(json.dumps(probe_fanout_mode_ab(spark, 20_000, rounds=1)))
     if which in ("minhash", "all"):
         print(json.dumps(probe_minhash(spark, 250_000)))
         print(json.dumps(probe_minhash(spark, 1_000_000)))
