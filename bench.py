@@ -1,9 +1,12 @@
-"""Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: time every registry query at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.  Each query is forced end-to-end with
-the `noop` sink (full execution, no write cost), after a warm-up pass of
-the session.
+Prints ONE JSON line and mirrors it to BENCH_LAST.json:
+{"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec},
+"sf": ..., "cpus": ..., "complete": ..., "n_queries_timed": ...}, plus
+"errors" when a query failed.  Each query is forced end-to-end with the
+`noop` sink (full execution, no write cost) after a warm-up pass of the
+session; its time is the min of N_RUNS_PER_QUERY runs in this process.
+Each run stands alone: no earlier run's timings are read or pooled.
 """
 
 from __future__ import annotations
@@ -42,81 +45,6 @@ SESSION_RESTART_EVERY = 12
 
 #: intra-process repeats per query, keeping the min (see the loop note).
 N_RUNS_PER_QUERY = 3
-
-#: VM health calibration (r7 verdict task 2): the single source of truth
-#: for the tpch_q6-at-sf0.1 healthy floor, shared with
-#: tools/vm_calibrate.py and tools/close_round.py.  This box swings
-#: 3-10x in throughput; a raw BENCH line taken while DEGRADED is
-#: sick-host noise, and the note derived from these constants keeps that
-#: attribution next to the numbers it explains.
-#: floor EPOCHS (r10 verdict #1): 0.20s was set in the r8-era window and
-#: never reproduced since — 21 r10 calibrations bottomed at 0.23s, so the
-#: old floor certified HEALTHY on a box ~1.2x slower than the one that
-#: set the minima it was compared against.  Re-based r11 to the observed
-#: r10 distribution floor; the factor tightens 1.75 -> 1.5 so the
-#: absolute admit threshold stays where it was (0.35s -> 0.345s) instead
-#: of silently loosening with the re-base.  History: 0.20 (r7-r10,
-#: factor 1.75) -> 0.23 (r11-, factor 1.5).  Cross-epoch minima
-#: comparisons must scale by the floor ratio (SCALE.md r11 epoch note).
-VM_HEALTHY_Q6_MIN = 0.23
-VM_HEALTHY_FACTOR = 1.5
-
-#: Healthy floor for the second calibration axis: a 50M-row / 1M-group
-#: shuffle burn (`spark.range(50e6) % 1e6 groupBy count`).  r9 found a
-#: host-degradation shape the scan-agg probe is blind to: pure codegen
-#: at full speed (2B-row burn 0.3-0.7s) while shuffle-heavy stages
-#: crawl 3-10x (this burn 1.7s healthy vs 5s+ degraded) — exactly the
-#: shape that inflates the pair-join dedup queries.  Floor measured on
-#: this box in the same window that reproduced tpch_q6's 0.20s.
-VM_HEALTHY_SHUFFLE_MIN = 1.7
-
-
-def vm_health_note(q6_raw: float, shuffle_raw: float | None = None) -> str:
-    """Render the calibration annotation for the raw axis timings.
-
-    Two axes when ``shuffle_raw`` is given (ADVICE r11 medium): the
-    scan axis (tpch_q6) is blind to shuffle-only degradation — r9 found
-    codegen at full speed while shuffle stages crawled 3-10x, exactly
-    the shape that inflates the pair-join dedup queries — and r12 saw
-    the mirror image (scan 2.5x, shuffle 0.9x).  The verdict token at
-    the end is what ``close_round --min-healthy`` greps, so HEALTHY
-    here means BOTH axes under their floors; a scan-HEALTHY/
-    shuffle-sick run no longer counts toward the early stop.
-    """
-    q6_factor = q6_raw / VM_HEALTHY_Q6_MIN
-    axes = f"scan axis tpch_q6 {q6_raw:.2f}s = {q6_factor:.1f}x its {VM_HEALTHY_Q6_MIN:.2f}s floor"
-    factor = q6_factor
-    if shuffle_raw is not None:
-        sh_factor = shuffle_raw / VM_HEALTHY_SHUFFLE_MIN
-        axes += (
-            f"; shuffle axis burn {shuffle_raw:.2f}s = "
-            f"{sh_factor:.1f}x its {VM_HEALTHY_SHUFFLE_MIN:.2f}s floor"
-        )
-        factor = max(factor, sh_factor)
-    verdict = "HEALTHY" if factor <= VM_HEALTHY_FACTOR else "DEGRADED"
-    return (
-        f"{axes}; worst axis {factor:.1f}x -> {verdict}"
-        + (
-            " (raw totals from DEGRADED runs are sick-host noise, not "
-            "regressions; the fingerprint-matched minima absorb them)"
-            if verdict == "DEGRADED"
-            else ""
-        )
-    )
-
-
-def measure_shuffle_burn(spark, n_runs: int = 2) -> float:
-    """Min-of-``n_runs`` of the 50M-row / 1M-group shuffle burn — the
-    second calibration axis (same probe as tools/vm_calibrate.py)."""
-    best = None
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        spark.range(50_000_000).selectExpr("id % 1000000 as k").groupBy(
-            "k"
-        ).count().write.mode("overwrite").format("noop").save()
-        el = time.perf_counter() - t0
-        best = el if best is None else min(best, el)
-    return round(best, 3)
 
 
 def _ram_scratch_if_roomy() -> None:
@@ -162,11 +90,7 @@ def main() -> None:
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # The core count is part of a timing's identity: minima pooled across
-    # different SPARK_GRAFT_CPUS values would report (and did report, r12)
-    # 32-core minima for an 8-core run, collapsing the driver's scaling
-    # ratios to 1.0 (r12 verdict item 1).  Recorded in every history line
-    # and matched in _history_minima.
+    # Timings only compare at the same core count, so the line records it.
     cpus = graft_cpus()
     spark = _fresh_session()
 
@@ -215,69 +139,20 @@ def main() -> None:
             continue
         timings[name] = round(best, 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Append the RAW run to history first, then report per-query minima
-    # across this run and prior history lines at the same sf AND git sha:
-    # this VM swings 3x run-to-run (round-2 recorded three queries at
-    # 2-3.6x their stable times), and a single outlier run must not
-    # masquerade as a regression.  Same-sha filtering guarantees the
-    # minima only ever mix timings of identical code.
-    raw = dict(timings)
-    # Calibration note first so the HISTORY line carries it too — the
-    # verdict's fingerprint-matched minima pools can then be filtered by
-    # host health without re-deriving it from the raw q6 column.
-    vm_note = None
-    if sf_val == 0.1 and "tpch_q6" in raw:
-        try:
-            shuffle_raw = measure_shuffle_burn(spark)
-        except Exception:  # noqa: BLE001 — the note degrades to one axis
-            shuffle_raw = None
-        vm_note = vm_health_note(raw["tpch_q6"], shuffle_raw)
-    _append_history(
-        {
-            "metric": "headline_queries_total_runtime",
-            "value": round(sum(raw.values()), 3),
-            "unit": "sec",
-            "queries": raw,
-            "sf": sf_val,
-            "cpus": cpus,
-            **({"vm_calibration": vm_note} if vm_note else {}),
-        }
-    )
-    smoothed, runs_used = _history_minima(raw, sf_val, cpus)
     result = {
         "metric": "headline_queries_total_runtime",
-        "value": round(sum(smoothed.values()), 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
-        "queries": smoothed,
+        "queries": timings,
         "sf": sf_val,
         "cpus": cpus,
-        "raw_queries": raw,
-        "history_runs_used": runs_used,
         # Round-over-round totals are only comparable when every query
         # contributed a timing: errored queries are OMITTED from the sum,
         # so a smaller denominator would masquerade as a speedup (ADVICE
         # r4).  complete=false flags the total as incomparable.
         "complete": not errors,
-        "n_queries_timed": len(smoothed),
-        # Standing attributions for known-noisy entries (r6 verdict
-        # task 6): keep the explanation next to the number it explains.
-        "notes": {
-            "domain_rebalance": (
-                "r6->r7 minimum moved 0.46->~0.7s on an UNCHANGED query "
-                "fingerprint (identical code closure, plan audited: two "
-                "pruned passes, broadcast rates, no new exchange) — "
-                "VM/environment noise, not a plan change"
-            )
-        },
+        "n_queries_timed": len(timings),
     }
-    # Calibration line (r7 verdict task 2): every BENCH line self-reports
-    # whether the host was healthy when it ran, derived from the same
-    # floors tools/vm_calibrate.py uses.  Both axes (ADVICE r11 medium):
-    # the tpch_q6 scan timing falls out of the run itself; the shuffle
-    # burn was measured above on the live session (~2-5s, never part of
-    # a query timing).  Only meaningful at the calibrated sf.
-    if vm_note is not None:
-        result["notes"]["vm_calibration"] = vm_note
     if errors:
         result["errors"] = errors
     line = json.dumps(result)
@@ -294,127 +169,6 @@ def main() -> None:
     except Exception:  # noqa: BLE001 — never fail the bench for the copy
         pass
     print(line)
-
-
-def _git_sha() -> str | None:
-    try:
-        import subprocess
-
-        return (
-            subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                capture_output=True,
-                text=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                timeout=10,
-            ).stdout.strip()
-            or None
-        )
-    except Exception:
-        return None
-
-
-def _code_fingerprint() -> str | None:
-    """Hash of every tracked .py source (package + bench + entry).
-
-    "Identical code" is what makes mixing timings legitimate; the git
-    SHA is a poor proxy for it because artifact-only commits (bench
-    history, correctness JSON) change the SHA without changing a line
-    of code.  The fingerprint matches exactly when the measured code
-    matches."""
-    try:
-        import hashlib
-
-        root = os.path.dirname(os.path.abspath(__file__))
-        paths = [
-            os.path.join(root, "bench.py"),
-            os.path.join(root, "__spark_entry__.py"),
-        ]
-        for dirpath, _dirs, files in os.walk(
-            os.path.join(root, "hbase_tohdfs_spark")
-        ):
-            for f in files:
-                if f.endswith(".py"):
-                    paths.append(os.path.join(dirpath, f))
-        h = hashlib.sha256()
-        for p in sorted(paths):
-            h.update(p.encode())
-            with open(p, "rb") as fh:
-                h.update(fh.read())
-        return h.hexdigest()[:16]
-    except Exception:
-        return None
-
-
-def _history_minima(
-    timings: dict[str, float], sf, cpus: int = 32
-) -> tuple[dict[str, float], int]:
-    """Per-query min across this run and every BENCH_HISTORY.jsonl line
-    recorded at the same sf AND the same core count AND the same code
-    (fingerprint, falling back to git SHA).  cpus is part of a timing's
-    identity: before r13 the pool ignored it, so a SPARK_GRAFT_CPUS=8 run
-    reported mostly-32-core minima and the driver's scaling ratios read
-    ~1.0 (r12 verdict item 1).  Legacy lines without a cpus field predate
-    the fix and were all 32-core runs, so they count only toward 32-core
-    pools.  Returns (minima, number of history lines used); best-effort —
-    falls back to the raw timings on any error."""
-    try:
-        sha = _git_sha()
-        fp = _code_fingerprint()
-        path = _history_path()
-        out = dict(timings)
-        used = 0
-        with open(path) as fh:
-            for raw_line in fh:
-                try:
-                    line = json.loads(raw_line)
-                except ValueError:
-                    continue
-                if line.get("sf") != sf:
-                    continue
-                if int(line.get("cpus", 32)) != cpus:
-                    continue
-                # code identity: fingerprint when both sides have one
-                # (immune to artifact-only commits), git sha otherwise
-                if line.get("code_fp") is not None and fp is not None:
-                    if line["code_fp"] != fp:
-                        continue
-                elif sha is None or line.get("git_sha") != sha:
-                    continue
-                used += 1
-                for name, sec in (line.get("queries") or {}).items():
-                    if name in out and isinstance(sec, (int, float)):
-                        out[name] = min(out[name], round(float(sec), 3))
-        # the current in-memory run is also in history now; don't count it
-        return out, max(used - 1, 0)
-    except Exception:
-        return timings, 0
-
-
-def _append_history(result: dict) -> None:
-    """Append this run to BENCH_HISTORY.jsonl (per-query timings + git
-    SHA + wall time) so round-over-round regressions are mechanically
-    diffable; best-effort — never fails the bench."""
-    try:
-        line = dict(
-            result,
-            git_sha=_git_sha(),
-            code_fp=_code_fingerprint(),
-            n_runs=N_RUNS_PER_QUERY,
-            ts=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        )
-        with open(_history_path(), "a") as fh:
-            fh.write(json.dumps(line) + "\n")
-    except Exception:
-        pass
-
-
-def _history_path() -> str:
-    """BENCH_HISTORY.jsonl location (separate so tests can point the
-    minima-pool logic at a fixture file)."""
-    return os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_HISTORY.jsonl"
-    )
 
 
 if __name__ == "__main__":

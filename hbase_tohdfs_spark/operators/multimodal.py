@@ -847,11 +847,11 @@ def blob_features_and_frames(
         for pdf in batches:
             out = {f.name: [] for f in MULTIMODAL_UNION_SCHEMA.fields}
             for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                # NULL text (ADVICE r12): the staged path's SQL cast
-                # keeps the blob NULL and the oracle's md5(NULL) is NULL
-                # — a str(None) payload would fabricate b"None" rows.
-                # Features row with NULL payload columns, no frames
-                # (generate_series over a NULL n_frames emits nothing).
+                # NULL text (ADVICE r12): match the DuckDB oracle, whose
+                # md5(NULL) is NULL — a str(None) payload would
+                # fabricate b"None" rows.  Features row with NULL
+                # payload columns, no frames (the oracle's
+                # generate_series over a NULL n_frames emits nothing).
                 if t is None or (isinstance(t, float) and t != t):
                     out["doc_id"].append(doc_id)
                     out["kind"].append("features")

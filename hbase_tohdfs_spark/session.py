@@ -29,6 +29,17 @@ def graft_cpus() -> int:
     raise ValueError(f"{CPUS_ENV}={raw!r}: expected a positive integer or '*'")
 
 
+def driver_memory() -> str:
+    """Driver heap: ``$SPARK_DRIVER_MEM`` if set, else half of physical
+    memory capped at 16g, in ``m`` units, so the default never asks for
+    more heap than the host has."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 16 * 1024**3) // 1024**2}m"
+
+
 def get_spark(
     app_name: str = "hbase_tohdfs_spark",
     master: str | None = None,
@@ -62,7 +73,7 @@ def get_spark(
         # (sessions not built here get this via ensure_nanos_as_long)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     # Scratch placement is OPT-IN via SPARK_GRAFT_LOCAL_DIR (the bench
     # harness points it at /dev/shm — measured tpch_q9 2.01s -> 1.62s

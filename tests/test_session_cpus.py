@@ -1,5 +1,6 @@
 """``SPARK_GRAFT_CPUS`` is parsed in one place: ``*`` means every core
-of the host, a positive integer is taken as is, anything else raises."""
+of the host, a positive integer is taken as is, anything else raises.
+The driver heap defaults to half of physical memory, capped at 16g."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import os
 
 import pytest
 
-from hbase_tohdfs_spark.session import CPUS_ENV, graft_cpus
+from hbase_tohdfs_spark.session import CPUS_ENV, driver_memory, graft_cpus
 
 
 def test_star_means_every_host_core(monkeypatch):
@@ -25,3 +26,17 @@ def test_anything_else_raises_naming_the_variable(monkeypatch, raw):
     monkeypatch.setenv(CPUS_ENV, raw)
     with pytest.raises(ValueError, match=CPUS_ENV):
         graft_cpus()
+
+
+@pytest.mark.parametrize(
+    "gib,env,heap",
+    [(15, None, "7680m"), (64, None, "16384m"), (15, "3g", "3g"), (64, "3g", "3g")],
+)
+def test_driver_heap_is_half_of_host_memory_capped_at_16g(monkeypatch, gib, env, heap):
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 1024**3 // 4096}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    if env is None:
+        monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_DRIVER_MEM", env)
+    assert driver_memory() == heap
