@@ -274,7 +274,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             from hbase_tohdfs_spark.operators import multimodal
 
             out = multimodal.phash_dup_groups(
-                multimodal.render_phash_images(docs)
+                multimodal.render_image_phash(docs)
             )
         elif args.method == "semantic":
             from hbase_tohdfs_spark.operators import similarity
@@ -341,7 +341,7 @@ def main(argv: list[str] | None = None, spark=None) -> int:
 
         docs = spark.read.parquet(args.documentsParquet)
         # fused render+decode passes (r12): one Python stage per
-        # modality instead of attach -> consume, same rows
+        # modality
         if args.modality == "image":
             out = multimodal.render_image_stages(docs)
         elif args.modality == "audio":

@@ -6,10 +6,10 @@ chunk.  The reader walks the chunk list — skipping unknown chunks, as a
 real parser must — so a payload with e.g. a LIST/INFO chunk between
 ``fmt `` and ``data`` still decodes.
 
-This is the real audio codec behind the multimodal pipeline: round-4's
-``decode_audio_stub`` raised NotImplementedError because compressed
-codecs (mp3/aac) need libraries this container lacks; uncompressed PCM
-needs only ``struct``, so the decode can be honest.
+This is the real audio codec behind the multimodal pipeline.
+Compressed codecs (mp3/aac) need libraries the runtime does not ship,
+so they stay undecoded; uncompressed PCM needs only ``struct``, so the
+decode can be honest.
 
 No reference counterpart: tmalaska/HBase-ToHDFS has no media path; this
 supports the training-data-pipeline surface (SURVEY.md north star).

@@ -39,7 +39,7 @@ LSH_BANDS = 4
 LSH_ROWS = MINHASH_FUNCS // LSH_BANDS
 
 #: Mersenne prime 2^31 - 1: the MinHash rehash field.  Each shingle is
-#: digested ONCE (md5 -> 32-bit slice mod p); hash i is the affine
+#: reduced ONCE (its 60-bit poly hash mod p); hash i is the affine
 #: rehash (a_i*h + b_i) mod p — the standard universal-hashing MinHash
 #: family (Broder '97 uses random linear permutations; every practical
 #: implementation, e.g. the datasketch library, uses exactly this
@@ -66,16 +66,10 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-#: DuckDB spelling of the per-shingle base hash (the engine-side twin
-#: lives inline in :func:`signatures_from_shingles`).
-MINHASH_BASE_DUCKDB = (
-    "list_transform(s, x -> ('0x' || substr(md5(x), 1, 8))::BIGINT"
-    f" % {MINHASH_PRIME})"
-)
-
-#: DuckDB twin of the ``prehashed=True`` base hash: the shingles are
-#: already 60-bit poly hashes (non-negative), so the base hash is just
-#: the reduction into the Mersenne field — plain ``%`` == ``pmod``.
+#: DuckDB twin of the base hash in :func:`signatures_from_shingles`: the
+#: shingles are already 60-bit poly hashes (non-negative), so the base
+#: hash is just the reduction into the Mersenne field — plain ``%`` ==
+#: ``pmod``.
 MINHASH_BASE_POLY_DUCKDB = f"list_transform(s, x -> x % {MINHASH_PRIME})"
 
 
@@ -99,7 +93,6 @@ def minhash_signatures(
     docs: DataFrame,
     k: int = 3,
     num_hashes: int = MINHASH_FUNCS,
-    shingle_hash: str = "poly",
 ) -> DataFrame:
     """Per-doc MinHash signature: sig[i] = min over shingles of hash_i,
     where hash_i is the affine rehash of ONE base hash per shingle (see
@@ -107,59 +100,41 @@ def minhash_signatures(
     Docs with no shingles (< k tokens) are excluded, matching the
     oracle.
 
-    ``shingle_hash`` picks the base-hash family (MinHash's guarantees
-    are hash-agnostic, but EMITTED SIGNATURES differ — don't mix
-    families across persisted signature stores): ``"poly"`` (default)
-    hashes each token once and Horner-folds per window — no shingle
-    string, k x fewer md5 bytes (the winnowing r9 map-side form);
-    ``"str"`` md5s the concat_ws shingle string (the pre-r9 family)."""
-    if shingle_hash == "poly":
-        return signatures_from_shingles(
-            poly_shingle_docs(docs, k), num_hashes, prehashed=True
-        )
-    if shingle_hash == "str":
-        return signatures_from_shingles(shingle_docs(docs, k), num_hashes)
-    raise ValueError(f"unknown shingle_hash {shingle_hash!r}")
+    The shingles are 60-bit poly hashes: each token is hashed once and
+    Horner-folded per window — no shingle string, k x fewer md5 bytes
+    (the winnowing r9 map-side form).  The pre-r9 family md5'd the
+    concat_ws shingle string; its signatures differ (MinHash's
+    guarantees are hash-agnostic, the emitted values are not)."""
+    return signatures_from_shingles(poly_shingle_docs(docs, k), num_hashes)
 
 
 def signatures_from_shingles(
     sh_docs: DataFrame,
     num_hashes: int = MINHASH_FUNCS,
-    prehashed: bool = False,
 ) -> DataFrame:
-    """Signatures from a prepared ``(doc_id, sh)`` frame (see
-    :func:`~hbase_tohdfs_spark.operators.text.shingle_docs`).  The
+    """Signatures from a prepared ``(doc_id, sh)`` frame of 60-bit
+    BIGINT shingle hashes
+    (:func:`~hbase_tohdfs_spark.operators.text.poly_shingle_docs`).  The
     empty-doc filter runs on the ``sh`` column directly — predicate
     pushdown must not sink a re-derived tokenize chain below the scan.
 
-    Formulation: explode shingles -> ONE md5-derived base hash per
-    shingle -> groupBy(doc_id) with num_hashes ``min((a_i*h+b_i)%p)``
-    aggregates.  Everything — digest, rehash lanes, partial min — runs
-    inside whole-stage codegen, unlike ``transform``/``array_min``
-    lambdas, which Spark interprets per element; measured at 500k docs
-    / 25M shingles the codegen agg beats the lambda form 18.0s vs
-    23.0s (and the old 16-md5s-per-shingle lambda form, 25.9s), and
-    ties it at 5k docs (SCALE.md).  The groupBy shuffle moves only one
-    partial-agg row of num_hashes longs per doc per map partition —
-    far smaller than the shingle arrays themselves, so the shape holds
-    at corpus scale.  Signature values are BIGINT in [0, 2^31-1).
-
-    ``prehashed=True`` declares the ``sh`` elements already 60-bit
-    BIGINT hashes (:func:`~hbase_tohdfs_spark.operators.text.poly_shingle_docs`);
-    the base hash is then just the reduction into the Mersenne field —
-    no md5, no string (DuckDB twin: ``MINHASH_BASE_POLY_DUCKDB``)."""
-    base = (
-        F.expr(f"pmod(s, {MINHASH_PRIME})")
-        if prehashed
-        else F.expr(
-            "cast(conv(substr(md5(s), 1, 8), 16, 10) as bigint)"
-            f" % {MINHASH_PRIME}"
-        )
-    )
+    Formulation: explode shingles -> ONE base hash per shingle (the
+    reduction into the Mersenne field; no md5, no string — DuckDB twin:
+    ``MINHASH_BASE_POLY_DUCKDB``) -> groupBy(doc_id) with num_hashes
+    ``min((a_i*h+b_i)%p)`` aggregates.  Everything — base hash, rehash
+    lanes, partial min — runs inside whole-stage codegen, unlike
+    ``transform``/``array_min`` lambdas, which Spark interprets per
+    element; measured at 500k docs / 25M shingles the codegen agg beats
+    the lambda form 18.0s vs 23.0s (and the old 16-md5s-per-shingle
+    lambda form, 25.9s), and ties it at 5k docs (SCALE.md).  The groupBy
+    shuffle moves only one partial-agg row of num_hashes longs per doc
+    per map partition — far smaller than the shingle arrays themselves,
+    so the shape holds at corpus scale.  Signature values are BIGINT in
+    [0, 2^31-1)."""
     ex = (
         sh_docs.filter(F.size("sh") > 0)
         .select("doc_id", F.explode("sh").alias("s"))
-        .select("doc_id", base.alias("h"))
+        .select("doc_id", F.expr(f"pmod(s, {MINHASH_PRIME})").alias("h"))
     )
     aggs = [
         F.min(F.expr(f"({a} * h + {b}) % {MINHASH_PRIME}")).alias(f"mh{i}")
@@ -302,22 +277,21 @@ def minhash_dedup_pairs(
     max_bucket_size: int | None = DEDUP_MAX_BUCKET,
     bands: int = LSH_BANDS,
     rows_per_band: int = LSH_ROWS,
-    shingle_hash: str = "poly",
 ) -> DataFrame:
     """End-to-end near-dup pipeline: MinHash -> LSH candidates (mega-bucket
     capped by default) -> exact Jaccard verification.
 
-    ``shingle_hash="poly"`` (default; see :func:`minhash_signatures`)
-    runs the whole pipeline — signature base hash AND the exact-Jaccard
-    verify sets — on 60-bit poly shingle hashes: the map side never
-    builds a shingle string, pays one md5 per token instead of one per
-    shingle (k x fewer hashed bytes), and the persisted shingle frame +
-    the verify join carry fixed 8-byte BIGINTs instead of strings.
-    Verification over hashed sets equals string-set Jaccard except
-    under a 60-bit collision, and the DuckDB oracle replays the
-    identical hashes, so output is row-identical by construction.
-    ``"str"`` keeps the pre-r9 md5-per-shingle family for persisted
-    signature/pair stores.
+    The whole pipeline — signature base hash AND the exact-Jaccard
+    verify sets — runs on 60-bit poly shingle hashes (see
+    :func:`minhash_signatures`): the map side never builds a shingle
+    string, pays one md5 per token instead of one per shingle (k x fewer
+    hashed bytes), and the persisted shingle frame + the verify join
+    carry fixed 8-byte BIGINTs instead of strings.  Verification over
+    hashed sets equals string-set Jaccard except under a 60-bit
+    collision, and the DuckDB oracle replays the identical hashes, so
+    output is row-identical by construction.  Against the pre-r9
+    md5-per-shingle-string family it measured 2.1x faster at 1M docs
+    (SCALE.md r9 continuation, "poly-hashed shingles for MinHash").
 
     ``bands``/``rows_per_band`` tune the banding S-curve to the target
     similarity: candidate probability is 1 - (1 - s^rows)^bands, and the
@@ -339,16 +313,9 @@ def minhash_dedup_pairs(
     OOMing on a big corpus.  The (pair-sized) result is materialized
     eagerly and the intermediates released before returning, so repeated
     calls on a long-lived session don't accumulate executor storage."""
-    if shingle_hash == "poly":
-        sh_docs = poly_shingle_docs(docs, k).persist()
-    elif shingle_hash == "str":
-        sh_docs = shingle_docs(docs, k).persist()
-    else:
-        raise ValueError(f"unknown shingle_hash {shingle_hash!r}")
+    sh_docs = poly_shingle_docs(docs, k).persist()
     sigs = signatures_from_shingles(
-        sh_docs,
-        num_hashes=bands * rows_per_band,
-        prehashed=shingle_hash == "poly",
+        sh_docs, num_hashes=bands * rows_per_band
     ).persist()
     cands = lsh_candidate_pairs(
         sigs,
@@ -370,13 +337,10 @@ def ngram_jaccard_pairs(
     k: int = 2,
     threshold: float = 0.5,
     max_df: int = NGRAM_MAX_DF,
-    prefix_filter: bool = False,
-    length_filter: bool = True,
-    shingle_hash: str = "poly",
 ) -> DataFrame:
     """Exact all-pairs word-k-gram Jaccard — the set-similarity-join
-    family (SSJoin, Chaudhuri et al. ICDE'06; PPJoin, Xiao et al.
-    WWW'08), with both classic prunings:
+    family (SSJoin, Chaudhuri et al. ICDE'06), as a plain inverted-index
+    pair count:
 
     * **df cap** (``max_df``): a shingle occurring in f docs contributes
       f^2 index-join rows; postings with document frequency > max_df are
@@ -384,76 +348,59 @@ def ngram_jaccard_pairs(
       clear a meaningful threshold).  This *defines* the operator's
       semantics: Jaccard = |A∩B∩rare| / (|A|+|B|−|A∩B∩rare|), mirrored
       exactly in the DuckDB oracle.
-    * **prefix filter** (``prefix_filter=True``): sort each doc's rare
-      shingles by a global (df ASC, shingle) order — rarest first — and
-      index only the first ``n_rare − ceil(t·n_full) + 1``.  Any pair
-      with Jaccard ≥ t has |A∩B∩rare| ≥ t·max(|A|,|B|) (from
-      i ≥ t·(|A|+|B|−i) and i ≤ min), and the prefix-filter theorem
-      then guarantees the two prefixes share a shingle, so joining
-      prefixes loses no pair.  Candidates are verified *exactly* with
-      ``array_intersect`` on the full rare sets — output is row-identical
-      to the unfiltered index join (asserted by tests at 3 thresholds).
-
-    **Default is the plain inverted-index count** — chosen by
-    measurement, not guess.  On the short-document corpus shape this
-    engine targets (sf0.1: 5 000 docs, median 51 distinct bigrams, max
-    df 338) the t=0.5 prefixes still share boilerplate bigrams, so the
-    prefix join retains 7.9 M of the 12.5 M possible pairs (63 %) and
-    the per-candidate ``array_intersect`` verification costs ~25× more
-    than the plain path, whose verification is free (it *is* the
-    pair-count aggregation).  PPJoin wins when prefixes are selective —
-    long documents (thousands of shingles) and/or high thresholds —
-    which is when ``prefix_filter=True`` should be passed.
-
-    * **length filter** (``length_filter=True``, the default on both
-      paths): J = i/(na+nb−i) with i ≤ min(na,nb) gives J ≤
+    * **length filter**: J = i/(na+nb−i) with i ≤ min(na,nb) gives J ≤
       min(na,nb)/max(na,nb), so a pair whose sizes differ by more than
       the threshold ratio can never qualify — pruned INSIDE the index
       join (the sizes ride on the postings rows; the predicate costs
       nothing and cuts join output before the pair-count aggregation).
       The bound is slackened by 5e-5 because the emitted jaccard is
-      rounded to 4 decimals before the ``>= threshold`` filter — output
-      stays row-identical to the unfiltered join (asserted by tests on
-      a length-varied corpus).  On uniform-length corpora it prunes
-      nothing and costs nothing; on real corpora (web docs: heavy-tailed
-      lengths) it is the cheapest of the three prunings.
+      rounded to 4 decimals before the ``>= threshold`` filter, so no
+      qualifying pair is lost.  On uniform-length corpora it prunes
+      nothing and costs nothing; on a length-varied 1M-doc corpus it cut
+      19.5% of the candidate rows (SCALE.md r9, "n-gram Jaccard
+      candidate pruning").
 
-    * **shingle hash** (``shingle_hash="poly"``, the default): the set
-      element is the 60-bit rolling-polynomial hash of the shingle
-      (one md5 per TOKEN + a Horner fold per window — the winnowing r9
-      map-side form, :func:`~hbase_tohdfs_spark.operators.text.poly_shingle_hashes_sql`),
+    * **shingle hash**: the set element is the 60-bit rolling-polynomial
+      hash of the shingle (one md5 per TOKEN + a Horner fold per window —
+      the winnowing r9 map-side form,
+      :func:`~hbase_tohdfs_spark.operators.text.poly_shingles_sql`),
       not the concat_ws shingle STRING.  The trade: the string family
       hashes nothing, so poly ADDS one md5 per token on the map side;
       it pays that back by never materializing a shingle string and by
       turning all three shuffles (df groupBy + both sides of the
       postings self-join) and the join sort key from variable-length
-      string to fixed 8-byte BIGINT.  Measured (SCALE.md r9, interleaved
-      min-of-N): 1.8x faster at 1M docs where the index join dominates,
-      0.93x (neutral-win) on the sf0.1 real-document corpus, and ~1.4x
-      SLOWER on a 50k tiny-token synthetic (5-char tokens make the md5
-      dominate the string build it replaces) — pass ``"str"`` for that
-      regime.  Jaccard is then over hashed-shingle sets: identical to
-      string-set Jaccard except under a 60-bit collision (odds
-      ~(distinct shingles)²/2^61; ~2e-6 at 2M distinct), and the DuckDB
-      oracle replays the identical token-hash + fold, so output is
-      row-identical by construction even then.  ``shingle_hash="str"``
-      also serves corpora with persisted string-family pair sets.
+      string to fixed 8-byte BIGINT.  Measured (SCALE.md r9
+      continuation, "poly-hashed shingles for ngram Jaccard"):
+      1.8x faster at 1M docs where the index join dominates, 0.93x
+      (neutral-win) on the sf0.1 real-document corpus, and ~1.4x SLOWER
+      on a 50k tiny-token synthetic (5-char tokens make the md5 dominate
+      the string build it replaces).  Jaccard is then over
+      hashed-shingle sets: identical to string-set Jaccard except under
+      a 60-bit collision (odds ~(distinct shingles)²/2^61; ~2e-6 at 2M
+      distinct), and the DuckDB oracle replays the identical token-hash
+      + fold, so output is row-identical by construction even then.
 
-    Both paths are pure JVM codegen; shuffles are keyed on shingle /
-    doc_id.
+    **Recorded negative: the PPJoin prefix filter** (Xiao et al.
+    WWW'08; index only each doc's rarest ``n − ceil(t·n) + 1``
+    shingles, then verify candidates with ``array_intersect``).  It cut
+    80% of the candidates at 1M docs, yet ran 2.38x SLOWER end to end
+    (SCALE.md r9, same section): the plain path's verification *is* the
+    pair-count aggregation, while the prefix path re-verifies every
+    candidate on the full rare sets at ~25x the per-row cost.  On the
+    sf0.1 short-document corpus the t=0.5 prefixes still share
+    boilerplate bigrams and keep 63% of all pairs.  It can only win on
+    long documents with selective prefixes, a regime this engine's
+    corpora do not reach.
+
+    Pure JVM codegen; shuffles are keyed on shingle / doc_id.
     """
-    if shingle_hash == "poly":
-        sh_docs = poly_shingle_docs(docs, k).persist()
-    elif shingle_hash == "str":
-        sh_docs = shingle_docs(docs, k).persist()
-    else:
-        raise ValueError(f"unknown shingle_hash {shingle_hash!r}")
+    sh_docs = poly_shingle_docs(docs, k).persist()
     sets = sh_docs.filter(F.size("sh") > 0).select(
         "doc_id", F.array_distinct("sh").alias("shset")
     )
     sizes = sets.select("doc_id", F.size("shset").alias("n_sh"))
-    # Postings carry the doc's FULL distinct-shingle count so the prefix
-    # length needs no extra join back to `sizes`.
+    # Postings carry the doc's FULL distinct-shingle count so the length
+    # filter needs no extra join back to `sizes`.
     postings = sets.select(
         "doc_id", F.size("shset").alias("n_full"), F.explode("shset").alias("s")
     )
@@ -471,107 +418,35 @@ def ngram_jaccard_pairs(
     dfc = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     postings = postings.join(dfc.filter(F.col("df") <= max_df), "s")
 
+    a, b = postings.alias("a"), postings.alias("b")
+    # Rounded-jaccard-aware size-ratio bound (see docstring): prune a
+    # pair only when even round(min/max, 4) cannot reach the threshold.
+    length_ok = F.least(F.col("a.n_full"), F.col("b.n_full")) >= F.lit(
+        threshold - 5e-5
+    ) * F.greatest(F.col("a.n_full"), F.col("b.n_full"))
+    inter = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & length_ok,
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
     jac = F.round(
         F.col("n_common").cast("double")
         / F.greatest(F.col("na") + F.col("nb") - F.col("n_common"), F.lit(1)),
         4,
     )
-
-    # Rounded-jaccard-aware size-ratio bound (see docstring): prune a
-    # pair only when even round(min/max, 4) cannot reach the threshold.
-    def _length_cond(cond):
-        if not length_filter:
-            return cond
-        return cond & (
-            F.least(F.col("a.n_full"), F.col("b.n_full"))
-            >= F.lit(threshold - 5e-5)
-            * F.greatest(F.col("a.n_full"), F.col("b.n_full"))
-        )
-
-    if not prefix_filter:
-        a, b = postings.alias("a"), postings.alias("b")
-        inter = (
-            a.join(
-                b,
-                _length_cond(
-                    (F.col("a.s") == F.col("b.s"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id"))
-                ),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-            )
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("na"))
-        sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("nb"))
-        pairs = (
-            inter.join(sa, "doc_id_a")
-            .join(sb, "doc_id_b")
-            .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
-        )
-        return cacheutil.materialize_and_release(pairs, sh_docs)
-
-    # --- PPJoin path ---------------------------------------------------
-    # Rank each doc's rare shingles rarest-first; one shuffle on doc_id
-    # shared by both window functions.
-    w = Window.partitionBy("doc_id").orderBy("df", "s")
-    ranked = postings.select(
-        "doc_id",
-        "n_full",
-        "s",
-        F.row_number().over(w).alias("rnk"),
-        F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_rare"),
-    )
-    # Prefix length L = n_rare − ceil(t·n_full) + 1.  L ≤ 0 means even a
-    # full rare-set overlap can't reach the threshold — doc drops out.
-    # The 1e-9 guards the exact-integer boundary: if t·n floats a hair
-    # high, ceil would shorten the prefix by one and could drop a true
-    # pair; erring longer only adds candidates.
-    prefix = ranked.filter(
-        F.col("rnk")
-        <= F.col("n_rare")
-        - F.ceil(F.lit(threshold) * F.col("n_full") - F.lit(1e-9))
-        + 1
-    ).select("doc_id", "n_full", "s")
-    prefix = cacheutil.fanout_repartition(prefix, "s")
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(
-            b,
-            _length_cond(
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-            ),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"), F.col("b.doc_id").alias("doc_id_b")
-        )
-        .distinct()
-    )
-    # Exact verification on the full rare sets (sorted arrays, one row
-    # per doc; candidates are few, so shipping the arrays is cheap).
-    rare_sets = postings.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("rset"),
-        F.first("n_full").alias("n_full"),
-    )
-    ra = rare_sets.select(
-        F.col("doc_id").alias("doc_id_a"),
-        F.col("rset").alias("rset_a"),
-        F.col("n_full").alias("na"),
-    )
-    rb = rare_sets.select(
-        F.col("doc_id").alias("doc_id_b"),
-        F.col("rset").alias("rset_b"),
-        F.col("n_full").alias("nb"),
-    )
+    sa = sizes.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("nb"))
     pairs = (
-        cacheutil.fanout_repartition(cand, "doc_id_a")
-        .join(ra, "doc_id_a")
-        .join(rb, "doc_id_b")
-        .withColumn("n_common", F.size(F.array_intersect("rset_a", "rset_b")))
+        inter.join(sa, "doc_id_a")
+        .join(sb, "doc_id_b")
         .select("doc_id_a", "doc_id_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )

@@ -1,11 +1,8 @@
-"""Multimodal columns: opaque binary payloads + typed metadata, with
-Pandas-UDF feature extraction plumbing.
-
-Design for a 100 TB media pipeline: the payload is a ``binary`` column
-(inline for small blobs; at real scale a (uri, offset, length) pointer
-into object storage with the same downstream schema), metadata is a
-typed struct, and every decode/transform runs as an Arrow-batched
-``mapInPandas`` so Python cost is amortized per batch, not per row.
+"""Multimodal operators: each renders a media payload from a document's
+text and decodes it in the same Arrow-batched ``mapInPandas`` pass, so
+Python cost is amortized per batch, not per row, and the payload never
+crosses the JVM/Python boundary (at real scale the render step is the
+object-store fetch of a (uri, offset, length) pointer).
 
 IMAGE, AUDIO, and VIDEO-FRAME decode are REAL: payloads are genuine
 containers — 24-bit BMP (``formats/bmp.py``), 8-bit RGB PNG with full
@@ -19,7 +16,8 @@ boundaries, then compute channel statistics from the actual payload
 bytes.  The lossless formats (BMP/PNG/GIF) join the bit-exact DuckDB
 pixel oracle in a mixed corpus; JPEG, being lossy, is verified by
 round-trip error bounds and real-world interop tests instead.  Audio
-mp3/aac remain unavailable (no codec libraries here) and raise loudly.
+mp3/aac remain unavailable (no codec libraries here): the WAV reader
+rejects any format tag but PCM and G.711 with a ValueError.
 """
 
 from __future__ import annotations
@@ -36,64 +34,6 @@ from hbase_tohdfs_spark.formats import bmp as bmpfmt
 from hbase_tohdfs_spark.formats import gif as giffmt
 from hbase_tohdfs_spark.formats import png as pngfmt
 from hbase_tohdfs_spark.formats import wav as wavfmt
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_md5", T.StringType()),
-        T.StructField("head_hex", T.StringType()),
-    ]
-)
-
-
-def attach_blob(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Wrap a text column as an opaque media payload + typed metadata —
-    the canonical multimodal row shape."""
-    return docs.select(
-        "doc_id",
-        F.col(text_col).cast("binary").alias("blob"),
-        F.struct(
-            F.lit("text/plain").alias("mime"),
-            F.length(F.col(text_col).cast("binary")).alias("n_bytes"),
-        ).alias("meta"),
-    )
-
-
-def extract_features(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Features are deterministic pure-Python (hashlib) so the DuckDB oracle
-    can verify the full plumbing; a real pipeline would compute pixels /
-    spectrograms here with identical structure.
-    """
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs_col = pdf["blob"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": blobs_col.map(len).astype("int64"),
-                    "content_md5": blobs_col.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
-                    ),
-                    "head_hex": blobs_col.map(lambda b: bytes(b)[:8].hex()),
-                }
-            )
-
-    return blobs.mapInPandas(featurize, FEATURE_SCHEMA)
-
-
-IMAGE_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channel_means", T.ArrayType(T.DoubleType())),
-    ]
-)
-
 
 def _round_half_away(x: float, digits: int = 6) -> float:
     """SQL-style round (half away from zero).  Python's ``round`` is
@@ -173,55 +113,14 @@ def read_image(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, int]
     )
 
 
-def attach_image_blob(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Render each document into a real image container — BMP, PNG, or
-    GIF by ``doc_id % 3`` — via Arrow-batched ``mapInPandas``.  The
-    format mix is deterministic so every run of the media queries
-    exercises ALL THREE real decoders (stride/BGR, inflate+unfilter,
-    palette+LZW) on a third of the corpus each; pixels follow one
-    formula regardless of container (see synth_png / synth_gif)."""
-    blob_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("blob", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs, mimes = [], []
-            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
-                b, mime = _render_image_payload(doc_id, t)
-                blobs.append(b)
-                mimes.append(mime)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "meta": [
-                        {"mime": m, "n_bytes": len(b)}
-                        for m, b in zip(mimes, blobs)
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(render, blob_schema)
-
-
 def _render_image_payload(doc_id, text) -> tuple[bytes, str]:
-    """The mixed-corpus image renderer at row grain (BMP / PNG / GIF by
-    ``doc_id % 3``) — the single definition shared by
-    :func:`attach_image_blob` and the fused single-pass operators, so the
-    format mix cannot diverge between the staged and fused paths."""
+    """The mixed-corpus image renderer at row grain: BMP / PNG / GIF by
+    ``doc_id % 3``, so every run of the image operators exercises ALL
+    THREE real decoders (stride/BGR, inflate+unfilter, palette+LZW) on
+    a third of the corpus each; pixels follow one formula regardless of
+    container (see synth_png / synth_gif).  The single definition shared
+    by :func:`render_image_stages` and :func:`render_image_phash`, so
+    their format mix cannot diverge."""
     renderers = (
         (synth_bmp, "image/bmp"),
         (synth_png, "image/png"),
@@ -229,42 +128,6 @@ def _render_image_payload(doc_id, text) -> tuple[bytes, str]:
     )
     render, mime = renderers[int(doc_id) % 3]
     return render(str(text).encode("utf-8")), mime
-
-
-def attach_bmp_blob(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Render each document's text into a real BMP payload + typed
-    metadata via Arrow-batched ``mapInPandas`` — the ingest half of the
-    image pipeline (at real scale this stage is the object-store fetch)."""
-    blob_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("blob", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [synth_bmp(str(t).encode("utf-8")) for t in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "meta": [
-                        {"mime": "image/bmp", "n_bytes": len(b)} for b in blobs
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(render, blob_schema)
 
 
 def decode_bmp(payload: bytes) -> dict:
@@ -287,84 +150,15 @@ def decode_bmp(payload: bytes) -> dict:
     }
 
 
-def resize_bmp(payload: bytes, target_w: int = 8, target_h: int = 8) -> dict:
-    """REAL image resize: decode the BMP, nearest-neighbor resample to
-    ``target_w x target_h`` (src index = ``(out * src_dim) // out_dim``),
-    and report channel means of the RESAMPLED pixels."""
-    w, h, rows = bmpfmt.read_bmp24(payload)
-    n = target_w * target_h
-    sums = [0, 0, 0]
-    for ty in range(target_h):
-        sy = (ty * h) // target_h
-        for tx in range(target_w):
-            sx = (tx * w) // target_w
-            r, g, b = rows[sy][sx]
-            sums[0] += r
-            sums[1] += g
-            sums[2] += b
-    return {
-        "src_width": w,
-        "src_height": h,
-        "width": target_w,
-        "height": target_h,
-        "channel_means": [_round_half_away(s / n, 6) for s in sums],
-    }
-
-
-def resize_bmp_images(
-    blobs: DataFrame, target_w: int = 8, target_h: int = 8
-) -> DataFrame:
-    """Arrow-batched REAL resize over BMP payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [resize_bmp(bytes(b), target_w, target_h) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "src_width": [f["src_width"] for f in feats],
-                    "src_height": [f["src_height"] for f in feats],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "channel_means": [f["channel_means"] for f in feats],
-                }
-            )
-
-    return blobs.mapInPandas(run, RESIZE_SCHEMA)
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("src_width", T.IntegerType()),
-        T.StructField("src_height", T.IntegerType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channel_means", T.ArrayType(T.DoubleType())),
-    ]
-)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("frame_md5", T.StringType()),
-    ]
-)
-
-
 def walk_stub_frames(payload: bytes, every: int, digest=None) -> list[tuple]:
     """THE stub container's frame walk — ``8 + md5(payload)[5] % 8``
     frames, every ``every``-th one "decoded" to
     ``md5(payload || ':' || idx)`` — as ``(n_frames, frame_idx,
-    frame_md5)`` tuples.  The single definition shared by the staged
-    :func:`sample_frames` and the fused :func:`blob_features_and_frames`
-    (r12 verdict item 7: the fused op re-derived this formula inline,
-    the one place staged/fused could diverge silently).  ``digest``
-    accepts an already-computed ``hashlib.md5(payload)`` so the fused
-    pass keeps its one-digest-per-payload property."""
+    frame_md5)`` tuples — the per-row helper of
+    :func:`blob_features_and_frames`, kept separate so the frame formula
+    is written once, next to its docstring.  ``digest`` accepts an
+    already-computed ``hashlib.md5(payload)`` so the fused pass keeps
+    its one-digest-per-payload property."""
     if digest is None:
         digest = hashlib.md5(payload)
     n = 8 + digest.digest()[5] % 8
@@ -376,38 +170,6 @@ def walk_stub_frames(payload: bytes, every: int, digest=None) -> list[tuple]:
         )
         for idx in range(0, n, every)
     ]
-
-
-def sample_frames(blobs: DataFrame, every: int = 4) -> DataFrame:
-    """STUB video frame sampling: the fake container has
-    ``8 + md5(payload)[5] % 8`` frames; every ``every``-th frame is
-    "decoded" to a per-frame content hash ``md5(payload || ':' || idx)``
-    (one definition: :func:`walk_stub_frames`).  One output row per
-    sampled frame — the row-exploding batch shape a real ffmpeg-based
-    sampler produces."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "n_frames": [], "frame_idx": [], "frame_md5": []}
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                for n, idx, fmd5 in walk_stub_frames(bytes(b), every):
-                    out["doc_id"].append(doc_id)
-                    out["n_frames"].append(n)
-                    out["frame_idx"].append(idx)
-                    out["frame_md5"].append(fmd5)
-            yield pd.DataFrame(out)
-
-    return blobs.mapInPandas(run, FRAME_SCHEMA)
-
-
-def decode_audio_stub(payload: bytes) -> dict:
-    """STUB decode for COMPRESSED audio — raises, documenting the missing
-    dependency.  Uncompressed PCM has a real path: ``decode_wav`` /
-    ``extract_audio_features`` below (round 5)."""
-    raise NotImplementedError(
-        "compressed-audio decode requires torchaudio/ffmpeg, unavailable "
-        "in this container; PCM WAV decodes for real via decode_wav()"
-    )
 
 
 # ----------------------------------------------------------------- audio
@@ -438,41 +200,6 @@ def synth_wav(seed: bytes, sample_rate: int = 8000) -> bytes:
     return wavfmt.write_wav16(sample_rate, channels)
 
 
-def attach_wav_blob(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Render each document into a real PCM WAV payload + typed metadata
-    via Arrow-batched ``mapInPandas``."""
-    blob_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("blob", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [synth_wav(str(t).encode("utf-8")) for t in pdf[text_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "meta": [
-                        {"mime": "audio/wav", "n_bytes": len(b)} for b in blobs
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(render, blob_schema)
-
-
 def decode_wav(payload: bytes) -> dict:
     """REAL audio decode: walk the RIFF chunks, parse interleaved
     samples (PCM16 or G.711 mu-law/A-law, dispatched on the fmt tag),
@@ -495,31 +222,11 @@ def decode_wav(payload: bytes) -> dict:
     }
 
 
-def extract_audio_features(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched REAL audio feature extraction over WAV payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_wav(bytes(b)) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [f["sample_rate"] for f in feats],
-                    "n_channels": [f["n_channels"] for f in feats],
-                    "n_samples": [f["n_samples"] for f in feats],
-                    "channel_rms": [f["channel_rms"] for f in feats],
-                }
-            )
-
-    return blobs.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
-
-
 def render_audio_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Fused render + RIFF/PCM decode + RMS in ONE Arrow-batched pass
-    (the single-pass sibling of ``attach_wav_blob`` ->
-    ``extract_audio_features``; same rationale as
-    :func:`render_image_stages`).  Measured sf0.1 interleaved min-of-3:
-    media_audio_pipeline 1.23s -> 0.68s = 1.81x."""
+    (same rationale as :func:`render_image_stages`).  Measured against
+    the r11 two-pass render-then-decode form, sf0.1 interleaved
+    min-of-3: media_audio_pipeline 1.23s -> 0.68s = 1.81x."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -553,32 +260,12 @@ IMAGE_STAGES_SCHEMA = T.StructType(
 )
 
 
-def image_decode_resize(
-    blobs: DataFrame, target_w: int = 8, target_h: int = 8
-) -> DataFrame:
-    """Fused REAL decode + resize: parse each image container
-    (BMP/PNG/GIF/JPEG, dispatched on magic bytes) ONCE and emit both
-    pipeline stages
-    ('decode' = full-image channel means, 'resize' = nearest-neighbor
-    resample means) from the same decoded pixels.
-
-    At 100 TB the payload fetch dominates media pipelines; running decode
-    and resize as separate passes reads (or re-renders) every blob twice.
-    One Arrow-batched pass amortizes the fetch+parse across all derived
-    features — measured 2x on the bench (two mapInPandas passes -> one)."""
-
-    return blobs.mapInPandas(
-        _image_stages_batch_fn(target_w, target_h), IMAGE_STAGES_SCHEMA
-    )
-
-
 def _decode_resize_stage_rows(
     payload: bytes, target_w: int, target_h: int
 ) -> list[tuple]:
     """Per-payload decode+resize: parse the container ONCE, return both
     stage rows as ``(stage, src_w, src_h, out_w, out_h, channel_means)``
-    tuples — the single definition shared by the staged and fused
-    operators."""
+    tuples — the per-row helper of :func:`render_image_stages`."""
     w, h, rows = read_image(payload)
     n = w * h
     dec = [0, 0, 0]
@@ -605,15 +292,12 @@ def _decode_resize_stage_rows(
     ]
 
 
-def _image_stages_batch_fn(
-    target_w: int, target_h: int, render: bool = False, text_col: str = "text"
-):
-    """Batch loop for the decode+resize stages; with ``render=True`` the
-    input batches carry (doc_id, ``text_col``) and the payload is
-    rendered in the same pass (see :func:`render_image_stages`;
-    ``text_col`` must match the caller's selected column — ADVICE r12:
-    a hardcoded "text" broke every non-default column at execution
-    time)."""
+def _image_stages_batch_fn(target_w: int, target_h: int, text_col: str = "text"):
+    """Batch loop of :func:`render_image_stages`: the input batches carry
+    (doc_id, ``text_col``) and each payload is rendered and decoded in
+    the same pass (``text_col`` must match the caller's selected column —
+    ADVICE r12: a hardcoded "text" broke every non-default column at
+    execution time)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -621,13 +305,8 @@ def _image_stages_batch_fn(
                 "doc_id": [], "stage": [], "src_width": [], "src_height": [],
                 "out_width": [], "out_height": [], "channel_means": [],
             }
-            src = (
-                (d, _render_image_payload(d, t)[0])
-                for d, t in zip(pdf["doc_id"], pdf[text_col])
-            ) if render else (
-                (d, bytes(b)) for d, b in zip(pdf["doc_id"], pdf["blob"])
-            )
-            for doc_id, payload in src:
+            for doc_id, t in zip(pdf["doc_id"], pdf[text_col]):
+                payload = _render_image_payload(doc_id, t)[0]
                 for stage, sw, sh, ow, oh, means in _decode_resize_stage_rows(
                     payload, target_w, target_h
                 ):
@@ -648,8 +327,8 @@ def render_image_stages(
 ) -> DataFrame:
     """Fused render + decode + resize in ONE Arrow-batched pass.
 
-    The staged form (``attach_image_blob`` then ``image_decode_resize``)
-    is two back-to-back ``mapInPandas`` stages, so every blob crosses
+    The r11 staged form (render, then decode + resize) was two
+    back-to-back ``mapInPandas`` stages, so every blob crossed
     the JVM/Python boundary three times (render out, decode in, result
     out) purely to move between two Python functions.  At real scale the
     render stage is the object-store fetch — and fetch+decode belong in
@@ -659,7 +338,7 @@ def render_image_stages(
     (interleaved min-of-3, identical rows): media_image_pipeline
     1.95s -> 1.27s = 1.54x; plan shape 2 MapInPandas -> 1."""
     return docs.select("doc_id", text_col).mapInPandas(
-        _image_stages_batch_fn(target_w, target_h, render=True, text_col=text_col),
+        _image_stages_batch_fn(target_w, target_h, text_col=text_col),
         IMAGE_STAGES_SCHEMA,
     )
 
@@ -723,75 +402,14 @@ def sample_bmp_frames(payload: bytes, every: int = 2) -> list[dict]:
     return out
 
 
-def attach_video_blob(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Render each document into a BMP-sequence payload + typed metadata."""
-    blob_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("blob", T.BinaryType()),
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.LongType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def render(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = [
-                synth_bmp_sequence(str(t).encode("utf-8")) for t in pdf[text_col]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "blob": blobs,
-                    "meta": [
-                        {"mime": "video/x-bmp-seq", "n_bytes": len(b)}
-                        for b in blobs
-                    ],
-                }
-            )
-
-    return docs.select("doc_id", text_col).mapInPandas(render, blob_schema)
-
-
-def sample_video_frames(blobs: DataFrame, every: int = 2) -> DataFrame:
-    """Arrow-batched REAL frame sampling: one output row per sampled
-    frame (the row-exploding batch shape of a real video sampler)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_frames": [], "frame_idx": [],
-                "width": [], "height": [], "channel_means": [],
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
-                for f in sample_bmp_frames(bytes(b), every):
-                    out["doc_id"].append(doc_id)
-                    out["n_frames"].append(f["n_frames"])
-                    out["frame_idx"].append(f["frame_idx"])
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["channel_means"].append(f["channel_means"])
-            yield pd.DataFrame(out)
-
-    return blobs.mapInPandas(run, VIDEO_FRAME_SCHEMA)
-
-
 def render_video_frames(
     docs: DataFrame, every: int = 2, text_col: str = "text"
 ) -> DataFrame:
     """Fused render + frame-walk + per-frame decode in ONE Arrow-batched
-    pass (the single-pass sibling of ``attach_video_blob`` ->
-    ``sample_video_frames``).  Video payloads are the largest blobs in
-    the media family, so the staged form's extra JVM round-trip of the
-    full BMP sequence costs the most here.  Measured sf0.1 interleaved
-    min-of-3: media_video_pipeline 3.33s -> 1.36s = 2.44x."""
+    pass.  Video payloads are the largest blobs in the media family, so
+    the r11 two-pass form's extra JVM round-trip of the full BMP sequence
+    cost the most here.  Measured sf0.1 interleaved min-of-3:
+    media_video_pipeline 3.33s -> 1.36s = 2.44x."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -834,10 +452,10 @@ def blob_features_and_frames(
 ) -> DataFrame:
     """Fused payload features + sampled frames in ONE Arrow-batched pass.
 
-    The staged form (``extract_features`` UNION ``sample_frames``, both
-    over ``attach_blob``) scans the corpus twice and runs two Python
-    stages, each re-materializing every payload AND re-computing the
-    same md5 digest.  One pass computes the digest once per payload and
+    The r11 staged form (a features pass UNION a frames pass over the
+    same payloads) scanned the corpus twice and ran two Python stages,
+    each re-materializing every payload AND re-computing the same md5
+    digest.  One pass computes the digest once per payload and
     emits both grains NULL-padded into the union shape the pipeline
     query returns anyway.  Measured sf0.1 interleaved min-of-4,
     identical rows: multimodal_pipeline 1.67s -> 1.01s = 1.66x; plan
@@ -893,26 +511,6 @@ def blob_features_and_frames(
     )
 
 
-def extract_media_features(blobs: DataFrame, decoder=decode_bmp) -> DataFrame:
-    """Image feature extraction through Arrow-batched ``mapInPandas``;
-    ``decoder`` is pluggable — the REAL BMP parser by default; every
-    shipped format (BMP/PNG/GIF/JPEG) has a real parser in formats/."""
-
-    def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decoder(bytes(b)) for b in pdf["blob"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "channel_means": [f["channel_means"] for f in feats],
-                }
-            )
-
-    return blobs.mapInPandas(featurize, IMAGE_FEATURE_SCHEMA)
-
-
 # --------------------------------------------------------- perceptual hash
 PHASH_SCHEMA = T.StructType(
     [
@@ -948,29 +546,14 @@ def compute_phash(payload: bytes) -> str:
     return f"{v:016x}"
 
 
-def phash_images(blobs: DataFrame) -> DataFrame:
-    """Arrow-batched aHash over BMP payloads — the fingerprint half of
-    image near-dup detection (hamming distance on these 64-bit hashes is
-    the standard first-pass image dedup at corpus scale; grouping equal
-    hashes catches exact and near-exact re-encodes)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "phash": [compute_phash(b) for b in pdf["blob"]],
-                }
-            )
-
-    return blobs.mapInPandas(run, PHASH_SCHEMA)
-
-
-def render_phash_images(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Fused render + aHash in ONE Arrow-batched pass (the single-pass
-    sibling of ``attach_image_blob`` -> ``phash_images``; same rationale
-    and row-identity as :func:`render_image_stages`).  Measured sf0.1
-    interleaved min-of-3: image_phash 1.24s -> 1.00s = 1.24x."""
+def render_image_phash(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Fused render + aHash in ONE Arrow-batched pass (same rationale as
+    :func:`render_image_stages`): the fingerprint half of image near-dup
+    detection (hamming distance on these 64-bit hashes is the standard
+    first-pass image dedup at corpus scale; grouping equal hashes
+    catches exact and near-exact re-encodes).  Measured against the r11
+    two-pass form, sf0.1 interleaved min-of-3: image_phash 1.24s ->
+    1.00s = 1.24x."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -81,13 +81,13 @@ def shingle_docs(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFra
 def poly_shingle_docs(docs: DataFrame, k: int = 3, text_col: str = "text") -> DataFrame:
     """``(doc_id, sh: array<bigint>)`` — the 60-bit rolling-polynomial
     hash of every word-k-shingle (one md5 per TOKEN, then a Horner fold
-    per window; see :func:`poly_shingle_hashes_sql` for the constants
+    per window; see :func:`poly_shingles_sql` for the constants
     and the overflow-safe split).  Drop-in sibling of
     :func:`shingle_docs` for consumers that key on shingle IDENTITY
     (set joins, MinHash, Jaccard over sets) rather than the string
     itself: the element is a fixed 8-byte BIGINT, never a materialized
     shingle string.  DuckDB oracles replay the identical values via
-    :func:`poly_shingle_hashes_duckdb`.  Same empty-array semantics as
+    :func:`poly_shingles_duckdb`.  Same empty-array semantics as
     ``shingle_docs`` for docs with < k tokens."""
     return (
         with_tokens(docs, text_col)
@@ -98,7 +98,7 @@ def poly_shingle_docs(docs: DataFrame, k: int = 3, text_col: str = "text") -> Da
                 " cast(conv(substr(md5(t), 1, 15), 16, 10) as bigint))"
             ).alias("th"),
         )
-        .select("doc_id", F.expr(poly_shingle_hashes_sql("th", k)).alias("sh"))
+        .select("doc_id", F.expr(poly_shingles_sql("th", k)).alias("sh"))
     )
 
 
@@ -301,9 +301,9 @@ def url_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-#: rolling-hash base for ``fingerprint(shingle_hash="poly")``: the
-#: shingle hash is a Horner fold of the per-token 60-bit md5 hashes,
-#: base POLY_B, modulus 2^60.  The multiply is computed mod 2^60 via a
+#: rolling-hash base for :func:`poly_shingle_docs`: the shingle hash
+#: is a Horner fold of the per-token 60-bit md5 hashes, base POLY_B,
+#: modulus 2^60.  The multiply is computed mod 2^60 via a
 #: 30/30-bit split so every intermediate fits a SIGNED 64-bit integer in
 #: both engines (Spark bigint overflow throws under ANSI; DuckDB BIGINT
 #: overflow always throws): h*B mod 2^60 =
@@ -317,7 +317,7 @@ _POLY_M = 1 << 60
 _POLY_HALF = 1 << 30
 
 
-def poly_shingle_hashes_sql(token_hashes_col: str, k: int) -> str:
+def poly_shingles_sql(token_hashes_col: str, k: int) -> str:
     """SQL expression: the array of rolling polynomial hashes over every
     ``k``-window of the 60-bit token-hash array ``token_hashes_col``
     (1-indexed positions, same layout as ``shingles_expr``).  The k-step
@@ -339,8 +339,8 @@ def poly_shingle_hashes_sql(token_hashes_col: str, k: int) -> str:
     )
 
 
-def poly_shingle_hashes_duckdb(token_hashes_col: str, k: int) -> str:
-    """The DuckDB replay of ``poly_shingle_hashes_sql`` — same constants,
+def poly_shingles_duckdb(token_hashes_col: str, k: int) -> str:
+    """The DuckDB replay of ``poly_shingles_sql`` — same constants,
     same fold, 1-indexed list access; ``//`` for integer division and
     plain ``%`` (all operands are non-negative, so ``%`` == ``pmod``).
     Kept next to the Spark builder so the two can never drift apart;
@@ -358,9 +358,7 @@ def poly_shingle_hashes_duckdb(token_hashes_col: str, k: int) -> str:
     )
 
 
-def fingerprint(
-    docs: DataFrame, k: int = 3, window: int = 4, shingle_hash: str = "poly"
-) -> DataFrame:
+def fingerprint(docs: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
     """Document fingerprinting by winnowing (Schleimer et al., SIGMOD'03):
     hash every k-shingle, keep the minimum hash of each sliding window of
     ``window`` shingles, dedupe.  Output: per-doc fingerprint count and
@@ -392,57 +390,31 @@ def fingerprint(
     sort-free.  Winnowing guarantees hold for any hash family;
     60 bits make collisions negligible at any per-window set size.
 
-    ``shingle_hash`` picks the hash family (both 60-bit BIGINT, both
-    oracle-replayable; winnowing's guarantees are hash-agnostic, but the
-    EMITTED VALUES differ, so callers with persisted fingerprints must
-    not mix families):
-
-    * ``"poly"`` (default) — rolling polynomial (Rabin-Karp/Horner,
-      base ``POLY_B`` mod 2^60) over per-TOKEN 60-bit md5 hashes: one
-      md5 per token (k× fewer hashed bytes), no shingle string ever
-      built, then pure codegen integer arithmetic per shingle.  The r8
-      A/B showed winnowing's cost is map-dominated
-      (tokenize+shingle+md5); this attacks exactly that term (r8
-      verdict task 2) — measured 2.10x/2.07x faster than md5 at 1M/4M
-      docs (interleaved min-of-N, SCALE.md r9).
-    * ``"md5"`` — md5 of the concat_ws shingle string.  Map cost: one
-      string alloc + one md5 over ~k tokens' bytes per shingle.  Kept
-      for corpora with persisted md5-family fingerprints.
+    The hash family is the rolling polynomial (Rabin-Karp/Horner, base
+    ``POLY_B`` mod 2^60) over per-TOKEN 60-bit md5 hashes: one md5 per
+    token (k× fewer hashed bytes), no shingle string ever built, then
+    pure codegen integer arithmetic per shingle.  The r8 A/B showed
+    winnowing's cost is map-dominated (tokenize+shingle+md5); this
+    attacks exactly that term.  Against the md5-of-the-shingle-string
+    family it measured 2.10x/2.07x faster at 1M/4M docs (interleaved
+    min-of-N, SCALE.md "Round 9: winnowing rolling-hash").  Winnowing's
+    guarantees are hash-agnostic, but the EMITTED VALUES differ between
+    families, so fingerprints persisted by the md5 family do not compare
+    with these.
 
     Scale: 2 generators (no shuffle), one hash-partitioned codegen
     aggregation on (doc_id, wid), then the distinct+summary aggregation
     pair over the already-shrunk fingerprint rows.  No sort anywhere.
     """
-    if shingle_hash == "poly":
-        hashed = (
-            poly_shingle_docs(docs, k)
-            .select(
-                "doc_id",
-                (F.size("sh") - 1).alias("max_pos"),
-                F.posexplode_outer("sh").alias("pos", "h"),
-            )
-            .filter(F.col("h").isNotNull())
+    hashed = (
+        poly_shingle_docs(docs, k)
+        .select(
+            "doc_id",
+            (F.size("sh") - 1).alias("max_pos"),
+            F.posexplode_outer("sh").alias("pos", "h"),
         )
-    elif shingle_hash == "md5":
-        sh = shingle_docs(docs, k)
-        hashed = (
-            sh.select(
-                "doc_id",
-                (F.size("sh") - 1).alias("max_pos"),
-                F.posexplode_outer("sh").alias("pos", "shingle"),
-            )
-            .filter(F.col("shingle").isNotNull())
-            .select(
-                "doc_id",
-                "max_pos",
-                "pos",
-                F.expr(
-                    "cast(conv(substr(md5(shingle), 1, 15), 16, 10) as bigint)"
-                ).alias("h"),
-            )
-        )
-    else:
-        raise ValueError(f"unknown shingle_hash {shingle_hash!r}")
+        .filter(F.col("h").isNotNull())
+    )
     wids = hashed.select(
         "doc_id",
         F.explode(

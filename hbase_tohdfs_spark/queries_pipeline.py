@@ -89,7 +89,7 @@ def _minhash_ctes() -> str:
                      ('0x' || substr(md5(x), 1, 15))::BIGINT) AS th
             FROM toks WHERE len(t) >= 3),
     sh AS (SELECT doc_id,
-                  {text.poly_shingle_hashes_duckdb('th', 3)} AS s
+                  {text.poly_shingles_duckdb('th', 3)} AS s
            FROM th3),
     hsed AS (SELECT doc_id, {dedup.MINHASH_BASE_POLY_DUCKDB} AS hs FROM sh),
     sig AS (SELECT doc_id, {mh} FROM hsed),
@@ -329,7 +329,7 @@ NGRAM_JACCARD_ORACLE = f"""
                       ('0x' || substr(md5(x), 1, 15))::BIGINT) AS th
              FROM toks WHERE len(t) >= 2),
     sh2 AS (SELECT doc_id,
-                   {text.poly_shingle_hashes_duckdb('th', 2)} AS s
+                   {text.poly_shingles_duckdb('th', 2)} AS s
             FROM th_t),
     sets AS (SELECT doc_id, list_distinct(s) AS ss FROM sh2),
     sizes AS (SELECT doc_id, len(ss) AS n_sh FROM sets),
@@ -628,8 +628,8 @@ def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.fingerprint(_t(spark, sf_dir, "documents"), k=3, window=4)
 
 
-# Replays fingerprint(shingle_hash="poly"): per-token 60-bit md5 hashes,
-# then the SAME Horner fold (text.poly_shingle_hashes_duckdb embeds the
+# Replays text.fingerprint: per-token 60-bit md5 hashes,
+# then the SAME Horner fold (text.poly_shingles_duckdb embeds the
 # same constants as the Spark builder — single source of truth).
 FINGERPRINTS_ORACLE = f"""
     WITH {_TOKS_CTE},
@@ -638,7 +638,7 @@ FINGERPRINTS_ORACLE = f"""
                       ('0x' || substr(md5(x), 1, 15))::BIGINT) AS th
              FROM toks WHERE len(t) >= 3),
     hs AS (SELECT doc_id,
-                  {text.poly_shingle_hashes_duckdb('th', 3)} AS hsa
+                  {text.poly_shingles_duckdb('th', 3)} AS hsa
            FROM th_t),
     exploded AS (SELECT doc_id, unnest(hsa) AS h,
                         generate_subscripts(hsa, 1) AS pos FROM hs),
@@ -669,8 +669,8 @@ def q_media_image_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     LZW code-width growth) is a value mismatch on that third of the
     corpus — see multimodal.synth_bmp / synth_png / synth_gif."""
     docs = _t(spark, sf_dir, "documents")
-    # ONE fused render+decode+resize pass (r12: 1.54x over the staged
-    # attach -> decode form; payload crosses the Python boundary once)
+    # ONE fused render+decode+resize pass (r12: 1.54x over the r11
+    # render-then-decode form; payload crosses the Python boundary once)
     stages = multimodal.render_image_stages(docs, 8, 8)
     return stages.select(
         "doc_id",
@@ -730,8 +730,8 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode/resample/packing bug in either container parser is a value
     mismatch."""
     docs = _t(spark, sf_dir, "documents")
-    # fused render+hash pass (r12: 1.24x over attach -> phash)
-    return multimodal.render_phash_images(docs)
+    # fused render+hash pass (r12: 1.24x over the r11 two-pass form)
+    return multimodal.render_image_phash(docs)
 
 
 IMAGE_PHASH_ORACLE = """
@@ -792,13 +792,13 @@ REPETITION_ORACLE = f"""
 
 def q_media_audio_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio pipeline at doc grain: render each document into an
-    actual RIFF/WAVE PCM container (attach_wav_blob), then parse the
+    actual RIFF/WAVE PCM container (multimodal.synth_wav), then parse the
     chunk list and interleaved int16 samples and compute per-channel RMS
     from the decoded waveform.  One Arrow-batched mapInPandas pass.  The
     oracle replays the sample-generation formula (md5-digest bytes)
     independently in SQL — see multimodal.synth_wav."""
     docs = _t(spark, sf_dir, "documents")
-    # fused render+decode pass (r12: 1.81x over attach -> extract)
+    # fused render+decode pass (r12: 1.81x over the r11 two-pass form)
     feats = multimodal.render_audio_features(docs)
     return feats.select(
         "doc_id",
@@ -839,17 +839,18 @@ MEDIA_AUDIO_ORACLE = """
 
 def q_media_video_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-frame sampling at frame grain: render each document
-    into a sequence of complete BMP frames (attach_video_blob), walk the
-    container by each frame's self-declared file size, fully decode every
-    2nd frame, and report its dimensions + channel means.  One
+    into a sequence of complete BMP frames
+    (multimodal.synth_bmp_sequence), walk the container by each frame's
+    self-declared file size, fully decode every 2nd frame, and report
+    its dimensions + channel means.  One
     Arrow-batched mapInPandas pass with row-exploding output — the batch
     shape of a real ffmpeg-based sampler.  The oracle replays the
     per-frame pixel formula independently — see
     multimodal.synth_bmp_sequence."""
     docs = _t(spark, sf_dir, "documents")
-    # fused render+walk+decode pass (r12: 2.44x over attach -> sample;
-    # video blobs are the family's largest payloads, so the staged
-    # form's extra JVM round-trip costs the most here)
+    # fused render+walk+decode pass (r12: 2.44x over the r11 two-pass
+    # form; video blobs are the family's largest payloads, so its extra
+    # JVM round-trip cost the most here)
     frames = multimodal.render_video_frames(docs, every=2)
     return frames.select(
         "doc_id",
@@ -897,10 +898,10 @@ MEDIA_VIDEO_ORACLE = """
 def q_multimodal_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload features (doc grain) + sampled frames (frame grain)
     tagged + unioned with NULL-padded columns, computed in ONE fused
-    Arrow-batched pass (r12: 1.66x over the staged
-    extract_features-UNION-sample_frames form, which scanned the corpus
-    twice and hashed every payload twice; row-identity is test-pinned
-    against the staged operators, which remain shipped)."""
+    Arrow-batched pass (r12: 1.66x over the r11 features-UNION-frames
+    form, which scanned the corpus twice and hashed every payload twice;
+    pinned by the DuckDB oracle below and a pandas reference over the
+    same per-row helpers in tests/test_media_fused.py)."""
     docs = _t(spark, sf_dir, "documents")
     return multimodal.blob_features_and_frames(docs, every=4)
 

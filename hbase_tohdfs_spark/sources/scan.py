@@ -54,45 +54,3 @@ def read_parallel(spark: SparkSession, path: str) -> DataFrame:
     if splits is not None and splits < target:
         return df.repartition(target)
     return df
-
-
-def read_kv_source(
-    spark: SparkSession,
-    path: str,
-    source: str = "parquet",
-    catalog: str | None = None,
-) -> DataFrame:
-    """THE HBase connector seam (S1).  Every scan of the KV table goes
-    through this one indirection so the sandbox stand-in and a real
-    cluster connector are explicitly the same interface:
-
-    - ``source="parquet"`` (default, the only one available here): the
-      range-partitioned / bucketed parquet cell dataset written by
-      ``table.write_cells`` — CELL_SCHEMA rows, row-key predicates and
-      family pruning pushed to row-group stats.  This mirrors what the
-      reference's ``Scan`` + ``addFamily`` does server-side
-      (ExportHBaseTableToDelimiteredTxt.java:69-80).
-    - ``source="hbase"``: on a live cluster, swap in the public
-      hbase-connectors DataSource (``spark.read.format(
-      "org.apache.hadoop.hbase.spark").option("hbase.catalog",
-      catalog)``), mapping cells to the same CELL_SCHEMA contract
-      (row_key, family, qualifier, ts, value).  The JVM-side connector
-      pushes rowkey ranges and column-family projection into the
-      RegionServer scan exactly like the filters we push to parquet —
-      NOT INSTALLABLE in this sandbox, so requesting it raises.
-
-    Downstream operators (pivot, export, upsert-compact) depend only on
-    the returned DataFrame's schema, never on the storage, which is the
-    whole point of the seam."""
-    if source == "parquet":
-        from hbase_tohdfs_spark.model import CELL_SCHEMA
-
-        return spark.read.schema(CELL_SCHEMA).parquet(path)
-    if source == "hbase":
-        raise NotImplementedError(
-            "live HBase scan requires the hbase-connectors jar "
-            "(org.apache.hadoop.hbase.spark), not present in this "
-            "environment; deploy-time wiring goes here and must return "
-            "CELL_SCHEMA rows"
-        )
-    raise ValueError(f"unknown KV source {source!r}")

@@ -116,10 +116,9 @@ def _run_to_memory(
 
     ``parts``: per-call partition override.  JVM-state ops prefer FEW
     partitions (each state store pays init+commit per batch); PYTHON-
-    state ops (applyInPandasWithState / transformWithStateInPandas)
-    prefer MORE, because partitions bound Python-worker parallelism for
-    the per-group state loop (measured sf0.1 LWW: 1.79s at 4 parts vs
-    1.35s at 8).  The env knob still wins when set.
+    state ops (applyInPandasWithState) prefer MORE, because partitions
+    bound Python-worker parallelism for the per-group state loop
+    (measured sf0.1 LWW: 1.79s at 4 parts vs 1.35s at 8).  The env knob still wins when set.
 
     Checkpoint placement: a bounded ``availableNow`` backfill into a
     memory sink is throwaway by construction — its checkpoint (offset
@@ -401,90 +400,6 @@ def session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         "n_events",
         "sum_value",
-    )
-
-
-def last_event_pivot_stream_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LWW pivot on the Spark 4 ``transformWithStateInPandas`` API —
-    the successor of ``applyInPandasWithState`` (same operator as
-    :func:`last_event_pivot_stream_custom`, new state interface): an
-    explicit ``StatefulProcessor`` with a named ``ValueState``, Arrow
-    batches in, incremental update emissions out.
-
-    ``transformWithState`` requires the RocksDB state store provider —
-    which is also the right provider at scale (state spills to local
-    disk + changelog checkpointing instead of living on the JVM heap);
-    the conf is scoped to this run and restored after.
-
-    ENVIRONMENT-GATED: the TWS state protocol needs ``google.protobuf``,
-    which this container lacks (same category as the python-snappy Avro
-    codec) — the operator raises a clear ImportError up front when the
-    dependency is absent, and ``stream_lww_custom_state``
-    (``applyInPandasWithState``) remains the oracle-checked custom
-    stateful operator.  The test is skippable on the same condition.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (absent in "
-            "this environment); use last_event_pivot_stream_custom instead"
-        ) from exc
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class LwwProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("lww", _LWW_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                types, tss, vals = self._state.get()
-                lww = {t: (ts, v) for t, ts, v in zip(types, tss, vals)}
-            else:
-                lww = {}
-            for pdf in rows:
-                for t, ts, v in zip(pdf["event_type"], pdf["ts_us"], pdf["value"]):
-                    ts = int(ts)
-                    if t not in lww or ts >= lww[t][0]:
-                        lww[t] = (ts, float(v))
-            self._state.update(
-                (list(lww), [lww[t][0] for t in lww], [lww[t][1] for t in lww])
-            )
-            row = {"user_id": key[0], "max_ts": max(ts for ts, _ in lww.values())}
-            for t in EVENT_TYPES:
-                row[t] = lww[t][1] if t in lww else None
-            yield pd.DataFrame([row])
-
-        def close(self) -> None:
-            pass
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events = stream_events(spark, sf_dir).select(
-            "user_id", "event_type", "value", F.unix_micros("ts").alias("ts_us")
-        )
-        updates = events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=LwwProcessor(),
-            outputStructType=_LWW_OUTPUT_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-        # parts=8: same Python-state parallelism argument as the
-        # applyInPandasWithState twin above
-        emitted = _run_to_memory(updates, "update", parts=8)
-    finally:
-        spark.conf.set(provider_key, saved)
-    final = emitted.groupBy("user_id").agg(
-        *[F.max_by(t, "max_ts").alias(t) for t in EVENT_TYPES]
-    )
-    return final.select(
-        F.col("user_id").cast("string").alias("row_key"), *EVENT_TYPES
     )
 
 

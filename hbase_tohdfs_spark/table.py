@@ -80,15 +80,25 @@ def write_cells(
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Scan the KV dataset (S1).  Family pruning and row-key predicates are
-    plain filters that Parquet row-group stats push down.
+    """Scan the KV dataset (S1): the range-partitioned / bucketed parquet
+    cell dataset written by :func:`write_cells`, as CELL_SCHEMA rows.
+    Family pruning and row-key predicates are plain filters that Parquet
+    row-group stats push down — what the reference's ``Scan`` +
+    ``addFamily`` does server-side
+    (ExportHBaseTableToDelimiteredTxt.java:69-80).
 
-    Routed through ``sources.scan.read_kv_source`` — the documented seam
-    where a live ``org.apache.hadoop.hbase.spark`` connector would plug
-    in behind the identical CELL_SCHEMA contract."""
-    from hbase_tohdfs_spark.sources.scan import read_kv_source
-
-    return read_kv_source(spark, path, source="parquet")
+    This is THE HBase connector seam: every scan of the KV table comes
+    through here.  On a live cluster, swap the parquet read for the
+    public hbase-connectors DataSource (``spark.read.format(
+    "org.apache.hadoop.hbase.spark").option("hbase.catalog", ...)``),
+    mapping cells to the same CELL_SCHEMA contract (row_key, family,
+    qualifier, ts, value).  The JVM-side connector pushes rowkey ranges
+    and column-family projection into the RegionServer scan exactly like
+    the filters pushed to parquet here.  Its jar is not installed in
+    this environment.  Downstream operators (pivot, export,
+    upsert-compact) depend only on the returned DataFrame's schema,
+    never on the storage, which is the whole point of the seam."""
+    return spark.read.schema(CELL_SCHEMA).parquet(path)
 
 
 def write_cells_bucketed(

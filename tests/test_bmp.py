@@ -95,18 +95,17 @@ def test_decode_means_match_brute_force():
 def test_resize_identity_when_target_equals_source():
     payload = mm.synth_bmp(b"another doc")
     w, h, _ = bmp.read_bmp24(payload)
-    dec = mm.decode_bmp(payload)
-    rs = mm.resize_bmp(payload, w, h)
-    assert rs["channel_means"] == dec["channel_means"]
-    assert (rs["src_width"], rs["src_height"]) == (w, h)
+    dec, rs = mm._decode_resize_stage_rows(payload, w, h)
+    assert rs[5] == dec[5]  # channel means
+    assert rs[:5] == ("resize", w, h, w, h)
 
 
 def test_resize_single_pixel_is_nearest_neighbor():
     payload = mm.synth_bmp(b"nn check")
     w, h, rows = bmp.read_bmp24(payload)
-    rs = mm.resize_bmp(payload, 1, 1)
+    _, rs = mm._decode_resize_stage_rows(payload, 1, 1)
     r, g, b = rows[0][0]  # src index (0*h)//1, (0*w)//1 = (0, 0)
-    assert rs["channel_means"] == [float(r), float(g), float(b)]
+    assert rs[5] == [float(r), float(g), float(b)]
 
 
 def test_synth_bmp_deterministic_and_digest_derived():

@@ -41,14 +41,13 @@ def vectors(spark):
     [
         lambda d: dedup.minhash_dedup_pairs(d, k=3, threshold=0.5),
         lambda d: dedup.ngram_jaccard_pairs(d, k=2, threshold=0.5),
-        lambda d: dedup.ngram_jaccard_pairs(d, k=2, threshold=0.5, prefix_filter=True),
         lambda d: dedup.simhash_dup_pairs(d, max_hamming=3),
         lambda d: curation.contamination_report(d, eval_pct=10, min_common=2),
         lambda d: curation.domain_rebalance(d),
         lambda d: curation.temperature_mix(d),
     ],
-    ids=["minhash", "ngram", "ngram_ppjoin", "simhash", "contamination",
-         "rebalance", "temperature"],
+    ids=["minhash", "ngram", "simhash", "contamination", "rebalance",
+         "temperature"],
 )
 def test_pipeline_ops_release_their_caches(spark, docs, op):
     spark.catalog.clearCache()

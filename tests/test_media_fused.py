@@ -1,16 +1,25 @@
-"""Row-identity pins for the r12 fused media operators.
+"""Pins for the fused media operators.
 
-Each fused single-pass operator (render + consume in one Arrow-batched
-``mapInPandas``) must return exactly the rows of the staged form
-(``attach_*_blob`` -> consumer) it replaced in the registry queries and
-the CLI.  The staged operators stay shipped (tests, composability), so
-a drift between the two paths would silently fork the media semantics —
-these pins make that loud.
+Each operator renders a payload from a document's text and consumes it
+in one Arrow-batched ``mapInPandas`` pass.  Its output must equal a
+pandas frame built row by row from the same per-row helpers
+(``_render_image_payload``, ``_decode_resize_stage_rows``,
+``compute_phash``, ``decode_wav``, ``sample_bmp_frames``,
+``walk_stub_frames``), compared with ``assert_frame_equal``.  That pins
+the batch plumbing — schema, dtypes, row explosion, NULL padding.  The
+values themselves are pinned by the DuckDB oracles of the media queries
+(tests/test_queries_oracle.py), which replay the pixel and sample
+formulas without ever seeing a container.
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import pandas as pd
 import pytest
+from pandas.testing import assert_frame_equal
+from pyspark.sql import types as T
 
 from hbase_tohdfs_spark.operators import multimodal
 
@@ -33,67 +42,100 @@ def _assert_same_rows(a, b):
     assert b.exceptAll(a).count() == 0
 
 
-def test_render_image_stages_matches_staged(docs):
-    staged = multimodal.image_decode_resize(
-        multimodal.attach_image_blob(docs), 8, 8
+def _assert_matches_reference(df, records, dtypes, keys):
+    """``df`` (Spark) equals the pandas frame of ``records`` once both
+    are sorted on ``keys``; array columns compare as Python lists."""
+    got = df.toPandas()
+    for f in df.schema.fields:
+        if isinstance(f.dataType, T.ArrayType):
+            got[f.name] = got[f.name].map(list)
+    expected = pd.DataFrame.from_records(records, columns=df.columns).astype(dtypes)
+    assert_frame_equal(
+        got.sort_values(keys).reset_index(drop=True),
+        expected.sort_values(keys).reset_index(drop=True),
     )
-    fused = multimodal.render_image_stages(docs, 8, 8)
-    _assert_same_rows(staged, fused)
-    # the mixed corpus really exercises all three containers
-    assert {r["stage"] for r in fused.collect()} == {"decode", "resize"}
 
 
-def test_render_phash_matches_staged(docs):
-    staged = multimodal.phash_images(multimodal.attach_image_blob(docs))
-    fused = multimodal.render_phash_images(docs)
-    _assert_same_rows(staged, fused)
+def _texts(docs):
+    return [(r["doc_id"], r["text"]) for r in docs.collect()]
+
+
+def test_render_image_stages_matches_pandas_reference(docs):
+    records = [
+        (d, *row)
+        for d, t in _texts(docs)
+        for row in multimodal._decode_resize_stage_rows(
+            multimodal._render_image_payload(d, t)[0], 8, 8
+        )
+    ]
+    dtypes = {"doc_id": "int64", "src_width": "int32", "src_height": "int32",
+              "out_width": "int32", "out_height": "int32"}
+    _assert_matches_reference(
+        multimodal.render_image_stages(docs, 8, 8), records, dtypes,
+        ["doc_id", "stage"],
+    )
+
+
+def test_render_phash_matches_pandas_reference(docs):
+    records = [
+        (d, multimodal.compute_phash(multimodal._render_image_payload(d, t)[0]))
+        for d, t in _texts(docs)
+    ]
+    fused = multimodal.render_image_phash(docs)
+    _assert_matches_reference(fused, records, {"doc_id": "int64"}, ["doc_id"])
     # identical text + same doc_id%3 renderer -> identical phash
-    rows = {r["doc_id"]: r["phash"] for r in fused.collect()}
+    rows = dict(records)
     assert len(rows) == 6 and all(len(v) == 16 for v in rows.values())
 
 
-def test_render_audio_features_matches_staged(docs):
-    staged = multimodal.extract_audio_features(
-        multimodal.attach_wav_blob(docs)
+def test_render_audio_features_matches_pandas_reference(docs):
+    records = []
+    for d, t in _texts(docs):
+        f = multimodal.decode_wav(multimodal.synth_wav(t.encode("utf-8")))
+        records.append(
+            (d, f["sample_rate"], f["n_channels"], f["n_samples"], f["channel_rms"])
+        )
+    dtypes = {"doc_id": "int64", "sample_rate": "int32", "n_channels": "int32",
+              "n_samples": "int32"}
+    _assert_matches_reference(
+        multimodal.render_audio_features(docs), records, dtypes, ["doc_id"]
     )
-    fused = multimodal.render_audio_features(docs)
-    _assert_same_rows(staged, fused)
 
 
-def test_render_video_frames_matches_staged(docs):
-    staged = multimodal.sample_video_frames(
-        multimodal.attach_video_blob(docs), every=2
+def test_render_video_frames_matches_pandas_reference(docs):
+    records = [
+        (d, f["n_frames"], f["frame_idx"], f["width"], f["height"],
+         f["channel_means"])
+        for d, t in _texts(docs)
+        for f in multimodal.sample_bmp_frames(
+            multimodal.synth_bmp_sequence(t.encode("utf-8")), 2
+        )
+    ]
+    dtypes = {"doc_id": "int64", "n_frames": "int32", "frame_idx": "int32",
+              "width": "int32", "height": "int32"}
+    _assert_matches_reference(
+        multimodal.render_video_frames(docs, every=2), records, dtypes,
+        ["doc_id", "frame_idx"],
     )
-    fused = multimodal.render_video_frames(docs, every=2)
-    _assert_same_rows(staged, fused)
 
 
-def test_blob_features_and_frames_matches_staged_union(docs):
-    from pyspark.sql import functions as F
-
-    blobs = multimodal.attach_blob(docs)
-    feats = multimodal.extract_features(blobs).select(
-        "doc_id",
-        F.lit("features").alias("kind"),
-        "n_bytes",
-        "content_md5",
-        "head_hex",
-        F.lit(None).cast("int").alias("n_frames"),
-        F.lit(None).cast("int").alias("frame_idx"),
-        F.lit(None).cast("string").alias("frame_md5"),
+def test_blob_features_and_frames_matches_pandas_reference(docs):
+    records = []
+    for d, t in _texts(docs):
+        payload = t.encode("utf-8")
+        records.append(
+            (d, "features", len(payload), hashlib.md5(payload).hexdigest(),
+             payload[:8].hex(), None, None, None)
+        )
+        for n, idx, fmd5 in multimodal.walk_stub_frames(payload, 4):
+            records.append((d, "frame", None, None, None, n, idx, fmd5))
+    # toPandas turns the NULL-padded integer columns into float64
+    dtypes = {"doc_id": "int64", "n_bytes": "float64", "n_frames": "float64",
+              "frame_idx": "float64"}
+    _assert_matches_reference(
+        multimodal.blob_features_and_frames(docs, every=4), records, dtypes,
+        ["doc_id", "kind", "frame_idx"],
     )
-    frames = multimodal.sample_frames(blobs, every=4).select(
-        "doc_id",
-        F.lit("frame").alias("kind"),
-        F.lit(None).cast("long").alias("n_bytes"),
-        F.lit(None).cast("string").alias("content_md5"),
-        F.lit(None).cast("string").alias("head_hex"),
-        "n_frames",
-        "frame_idx",
-        "frame_md5",
-    )
-    fused = multimodal.blob_features_and_frames(docs, every=4)
-    _assert_same_rows(feats.unionByName(frames), fused)
 
 
 def test_render_image_stages_custom_text_col(docs):
@@ -130,8 +172,6 @@ def test_blob_features_null_text_matches_oracle_semantics(spark):
 def test_frame_walk_helper_is_shared():
     # r12 verdict item 7: the fused op re-derived the frame formula
     # inline.  One definition now; pin its output against the formula.
-    import hashlib
-
     payload = b"shared frame walk"
     n = 8 + hashlib.md5(payload).digest()[5] % 8
     walked = multimodal.walk_stub_frames(payload, every=4)
@@ -147,7 +187,7 @@ def test_frame_walk_helper_is_shared():
 def test_fused_plans_have_single_python_stage(docs):
     for df in (
         multimodal.render_image_stages(docs, 8, 8),
-        multimodal.render_phash_images(docs),
+        multimodal.render_image_phash(docs),
         multimodal.render_audio_features(docs),
         multimodal.render_video_frames(docs),
         multimodal.blob_features_and_frames(docs),

@@ -278,39 +278,6 @@ def test_multibatch_session_window_merges_across_batches(
     assert got_rows == sorted(map(tuple, batch.collect()))
 
 
-def test_tws_lww_matches_batch_pivot(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas LWW — skipped when the
-    environment lacks google.protobuf (the TWS state protocol needs it);
-    the operator itself raises a clear ImportError in that case."""
-    pytest.importorskip("google.protobuf")
-    from hbase_tohdfs_spark.streaming import pivot_stream as ps
-
-    got = ps.last_event_pivot_stream_tws(spark, sf_dir)
-    batch = (
-        normalize_event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .groupBy("user_id")
-        .pivot("event_type", ps.EVENT_TYPES)
-        .agg(F.max_by("value", F.unix_micros("ts")))
-        .select(F.col("user_id").cast("string").alias("row_key"), *ps.EVENT_TYPES)
-    )
-    assert sorted(map(tuple, got.collect()), key=str) == sorted(
-        map(tuple, batch.collect()), key=str
-    )
-
-
-def test_tws_lww_raises_clear_error_without_protobuf(spark, sf_dir):
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        pytest.skip("protobuf present; the gated path is exercised above")
-    except ImportError:
-        pass
-    from hbase_tohdfs_spark.streaming import pivot_stream as ps
-
-    with pytest.raises(ImportError, match="google.protobuf"):
-        ps.last_event_pivot_stream_tws(spark, sf_dir)
-
-
 # ---------------------------------------------------------------- OOO
 # Out-of-order replay: an event that arrives in a LATER micro-batch with
 # an OLDER timestamp — late but still inside the 1-day watermark — must

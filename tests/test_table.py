@@ -95,17 +95,3 @@ def test_upsert_ties_break_deterministically(spark):
     for b, d in ((base, delta), (delta, base)):  # order-independent
         row = tbl.upsert_cells(b, d).collect()[0]
         assert bytes(row["value"]) == b"zzz" and row["ts"] == 7
-
-
-def test_read_kv_source_seam(spark, tmp_path):
-    """read_table routes through the documented connector seam; the
-    unavailable live-HBase backend fails loudly with wiring guidance,
-    and unknown sources are rejected."""
-    import pytest
-
-    from hbase_tohdfs_spark.sources import scan
-
-    with pytest.raises(NotImplementedError, match="CELL_SCHEMA"):
-        scan.read_kv_source(spark, str(tmp_path), source="hbase")
-    with pytest.raises(ValueError, match="unknown KV source"):
-        scan.read_kv_source(spark, str(tmp_path), source="bigtable")

@@ -1,37 +1,83 @@
-"""Generate PLANS.md: the physical-plan audit of every registry query.
+"""Physical plans of the registry queries, in two modes.
 
-For each query: scans, pushed filters, read schemas (pruning evidence),
-shuffle/broadcast counts, partial aggregation, Python stages. Streaming
-queries are skipped (their micro-batch plans aren't built until
-execution).
+Default mode writes PLANS.md, the plan audit of every registry query:
+scans, pushed filters, shuffle/broadcast counts, partial aggregation,
+Python stages.  ``explain`` mode writes ``.explain("formatted")`` of
+each named query (default: every non-streaming one) to
+``OUTDIR/<query>_<TAG>.txt``, so a change's plan claims can be checked
+before and after it without running Spark.  Streaming queries — every
+registry name starting ``stream_`` — are skipped in both modes: their
+micro-batch plans aren't built until execution, and the frame they
+return is the post-memory-sink table.
 
 Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py explain OUTDIR TAG [query ...]
+       (explain mode reads the sf dir from $SPARK_GRAFT_SF_DIR)
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-STREAMING = {"stream_hourly_rollup", "stream_last_event_by_user", "stream_lww_custom_state"}
+DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+def _is_streaming(name: str) -> bool:
+    return name.startswith("stream_")
 
+
+def _session():
     # Keep operator plans lazy: pipeline ops otherwise materialize their
     # (small) results eagerly to release caches, which would reduce their
     # dumped plan to a post-materialization RDD scan.
-    import os
-
     os.environ["SPARK_GRAFT_LAZY_PLANS"] = "1"
+
+    from hbase_tohdfs_spark.session import get_spark
+
+    return get_spark(app_name="dump_plans")
+
+
+def explain(outdir: str, tag: str, names: list[str]) -> None:
+    from hbase_tohdfs_spark.queries import REGISTRY
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+    os.makedirs(outdir, exist_ok=True)
+    spark = _session()
+    for name in names or [n for n in REGISTRY if not _is_streaming(n)]:
+        if _is_streaming(name):
+            print(f"[skip-streaming] {name}")
+            continue
+        try:
+            df = REGISTRY[name].fn(spark, sf_dir)
+            plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+                df._jdf.queryExecution(), "formatted"
+            )
+        except Exception as exc:  # noqa: BLE001
+            plan = f"ERROR: {type(exc).__name__}: {exc}"
+        path = os.path.join(outdir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"# {name} — explain('formatted') at {sf_dir}\n")
+            fh.write(plan if plan.endswith("\n") else plan + "\n")
+        print(f"[ok] {path}")
+    spark.stop()
+
+
+def main() -> None:
+    if sys.argv[1:2] == ["explain"]:
+        if len(sys.argv) < 4:
+            sys.exit(__doc__)
+        explain(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
 
     from hbase_tohdfs_spark.plans.inspect import plan_facts
     from hbase_tohdfs_spark.queries import REGISTRY
-    from hbase_tohdfs_spark.session import get_spark
 
-    spark = get_spark(app_name="dump_plans")
+    spark = _session()
     lines = [
         "# PLANS — physical-plan audit of every registry query",
         "",
@@ -43,7 +89,7 @@ def main() -> None:
         "|---|---|---|---|---|---|---|",
     ]
     for name, spec in REGISTRY.items():
-        if name in STREAMING:
+        if _is_streaming(name):
             lines.append(f"| {name} | — | *streaming: micro-batch plan* | — | — | — | — |")
             continue
         # Isolate queries from each other: in lazy mode persist() marks
@@ -80,7 +126,7 @@ def main() -> None:
         "forbidding broadcast.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines))
     print("wrote PLANS.md")
 

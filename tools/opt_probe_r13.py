@@ -193,7 +193,7 @@ def probe_ngram_counts(spark, sf_dir: str) -> dict:
         "probe": "ngram_counts",
         "sf_dir": sf_dir,
         "candidate_rows_eq_join": cand_all,
-        "candidate_rows_after_length_filter": cand_lf,
+        "candidate_rows_after_size_ratio_prune": cand_lf,
         "distinct_candidate_pairs": distinct_pairs,
     }
 
