@@ -130,26 +130,6 @@ def parse_avro_schema_json(text: str, strict: bool = True) -> ExportSchema:
     return ExportSchema(T.StructType(fields), avro_json=schema)
 
 
-def parse_avro_schema_file(path: str, strict: bool = True) -> ExportSchema:
+def parse_avro_schema_file(path: str) -> ExportSchema:
     with open(path, encoding="utf-8") as fh:
-        return parse_avro_schema_json(fh.read(), strict=strict)
-
-
-def spark_type_to_avro(dtype: T.DataType) -> str:
-    """Inverse mapping used when writing Avro containers."""
-    for name, st in _AVRO_TO_SPARK_EXTENDED.items():
-        if st == dtype:
-            return name
-    raise UnknownDatatypeError(f"Unknown datatype {dtype.simpleString()}")
-
-
-def struct_to_avro_json(struct: T.StructType, name: str = "Export") -> dict:
-    return {
-        "namespace": "hbase_tohdfs_spark",
-        "type": "record",
-        "name": name,
-        "fields": [
-            {"name": f.name, "type": ["null", spark_type_to_avro(f.dataType)]}
-            for f in struct.fields
-        ],
-    }
+        return parse_avro_schema_json(fh.read())

@@ -18,7 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from hbase_tohdfs_spark.formats import avrolite
-from hbase_tohdfs_spark.model import ExportSchema, struct_to_avro_json
+from hbase_tohdfs_spark.model import ExportSchema
 from hbase_tohdfs_spark.operators.pivot import render_delimited
 
 _SEQ_CODECS = {
@@ -71,9 +71,8 @@ def read_sequencefile_lines(spark: SparkSession, path: str) -> DataFrame:
 def write_avro(
     typed: DataFrame,
     path: str,
-    schema: ExportSchema | None = None,
+    schema: ExportSchema,
     codec: str = "deflate",
-    record_name: str = "Export",
 ) -> None:
     """K3: Avro container sink (``ExportHBaseTableToAvro.java:90-105``).
 
@@ -82,6 +81,8 @@ def write_avro(
     (:mod:`hbase_tohdfs_spark.formats.avrolite`).  Parallelism is
     preserved (one file per partition, written task-side); with spark-avro
     on the classpath this function would be `df.write.format("avro")`.
+    ``schema`` is a parsed Avro schema file (``load_schema(..., fmt="avro")``):
+    its columns are written, its record JSON heads every part file.
 
     Codec mapping mirrors the reference args: ``gzip`` -> Avro
     ``deflate``, ``none``/other -> ``null``; ``snappy`` works when
@@ -101,23 +102,16 @@ def write_avro(
         raise ValueError(
             "snappy Avro codec unavailable (needs python-snappy); use gzip/none"
         )
-    struct = schema.struct if schema is not None else typed.schema
-    data_cols = [f.name for f in struct.fields]
-    avro_json = (
-        schema.avro_json
-        if schema is not None and schema.avro_json is not None
-        else struct_to_avro_json(struct, record_name)
-    )
     if os.path.isdir(path):
         shutil.rmtree(path)
     os.makedirs(path)
-    frame = typed.select(*data_cols)
+    frame = typed.select(*schema.columns)
 
     def _write_part(idx: int, rows):
         final = os.path.join(path, f"part-{idx:05d}.avro")
         tmp = f"{final}.tmp-{uuid.uuid4().hex}"
         n = avrolite.write_container(
-            tmp, avro_json, (row.asDict() for row in rows), codec=codec
+            tmp, schema.avro_json, (row.asDict() for row in rows), codec=codec
         )
         if n == 0:
             os.remove(tmp)  # match MR behavior: no empty part files kept

@@ -15,17 +15,13 @@ from hbase_tohdfs_spark.model import (
 )
 
 
-def load_schema(path: str, fmt: str | None = None, strict: bool = True) -> ExportSchema:
+def load_schema(path: str, fmt: str) -> ExportSchema:
     """Load a CSV (one-line column list) or Avro JSON schema file.
 
-    ``fmt``: ``"csv"`` | ``"avro"`` | None (sniff: leading ``{`` = Avro).
+    ``fmt``: ``"csv"`` | ``"avro"``.
     """
-    if fmt is None:
-        with open(path, encoding="utf-8") as fh:
-            head = fh.read(64).lstrip()
-        fmt = "avro" if head.startswith("{") else "csv"
     if fmt == "avro":
-        return parse_avro_schema_file(path, strict=strict)
+        return parse_avro_schema_file(path)
     if fmt == "csv":
         return parse_csv_schema_file(path)
     raise ValueError(f"unknown schema format: {fmt}")

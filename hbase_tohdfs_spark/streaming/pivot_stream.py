@@ -93,14 +93,12 @@ def _run_to_memory(
     maintenance on every micro-batch whether or not it holds state — at
     the harness's bounded toy backfills that fixed cost dominates wall
     clock (measured: the interval join drops 6.7s -> 2.8s going 32 -> 8
-    partitions at sf0.01).  Size state partitions to the workload via
-    ``SPARK_GRAFT_STREAM_PARTS`` (default 4; r7 measured the sf0.1
-    interval join at 1.86s/8 parts vs 1.06s/4 parts); a production
-    deployment with real state volume sets the session's
-    shuffle-partition conf to O(cluster cores) and raises this knob to
-    match.  Both confs are scoped to the run: the streaming query
-    captures them at start and prior values are restored for
-    subsequent batch queries.
+    partitions at sf0.01).  State partitions are sized by ``parts``
+    (default 4; r7 measured the sf0.1 interval join at 1.86s/8 parts vs
+    1.06s/4 parts); a production deployment with real state volume
+    passes O(cluster cores).  Both confs are scoped to the run: the
+    streaming query captures them at start and prior values are
+    restored for subsequent batch queries.
 
     ``needs_watermark_flush``: by default the run DISABLES the no-data
     micro-batch (r6 verdict task 4 — it costs ~0.6-0.9s of state-store
@@ -118,7 +116,7 @@ def _run_to_memory(
     partitions (each state store pays init+commit per batch); PYTHON-
     state ops (applyInPandasWithState) prefer MORE, because partitions
     bound Python-worker parallelism for the per-group state loop
-    (measured sf0.1 LWW: 1.79s at 4 parts vs 1.35s at 8).  The env knob still wins when set.
+    (measured sf0.1 LWW: 1.79s at 4 parts vs 1.35s at 8).
 
     Checkpoint placement: a bounded ``availableNow`` backfill into a
     memory sink is throwaway by construction — its checkpoint (offset
@@ -139,9 +137,7 @@ def _run_to_memory(
     from hbase_tohdfs_spark.operators import cacheutil
 
     spark = agg.sparkSession
-    parts = int(
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", str(parts or 4))
-    )
+    parts = parts or 4
     ckpt_root = os.environ.get("SPARK_GRAFT_STREAM_CKPT_DIR") or (
         "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
     )

@@ -87,15 +87,19 @@ def test_write_avro_overwrite_leaves_no_stale_parts(spark, tmp_path):
     the previous (more-partitioned) run with the new ones."""
     import os
 
+    from hbase_tohdfs_spark.model import parse_avro_schema_json
     from hbase_tohdfs_spark.sinks import writers
 
+    schema = parse_avro_schema_json(
+        '{"type": "record", "name": "T", "fields": [{"name": "l", "type": "long"}]}'
+    )
     out = str(tmp_path / "avro_out")
     big = spark.range(0, 100, 1, 8).selectExpr("id AS l")
-    writers.write_avro(big, out)
+    writers.write_avro(big, out, schema)
     assert len([f for f in os.listdir(out) if f.endswith(".avro")]) == 8
 
     small = spark.range(100, 103, 1, 1).selectExpr("id AS l")
-    writers.write_avro(small, out)
+    writers.write_avro(small, out, schema)
     parts = sorted(f for f in os.listdir(out) if f.endswith(".avro"))
     assert len(parts) == 1
     got = [r["l"] for r in avrolite.read_container(os.path.join(out, parts[0]))]

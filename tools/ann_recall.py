@@ -12,9 +12,11 @@ Usage: python tools/ann_recall.py [sf_dir] [k]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def recall_at_k(exact_df, approx_df, k: int) -> float:

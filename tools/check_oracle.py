@@ -21,11 +21,13 @@ from __future__ import annotations
 import datetime as _dt
 import decimal
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
