@@ -1,9 +1,11 @@
 """Minimal pure-Python Avro Object Container File codec.
 
 This environment has neither the spark-avro connector jar nor a Python
-avro library, so the engine's Avro sink/source (reference surface K3/S3,
-``ExportHBaseTableToAvro.java``, ``AvroReader.java``) carries its own
-implementation of the *public* Avro 1.x container spec
+avro library.  The Avro sink (reference surface K3,
+``ExportHBaseTableToAvro.java``) writes in the JVM through Hive's
+AvroSerDe; this module is the source side (S3, ``AvroReader.java``) and
+the independent decoder that checks what the JVM writes.  It implements
+the *public* Avro 1.x container spec
 (https://avro.apache.org/docs/current/specification/): header magic
 ``Obj\\x01``, a metadata map holding ``avro.schema`` / ``avro.codec``, a
 16-byte sync marker, then blocks of ``(count, byte-length, data, sync)``
@@ -18,10 +20,7 @@ uncompressed data, per the spec).  Requesting snappy without the
 library raises with a clear message.
 
 Files written by this codec are readable by any conformant Avro reader
-(verified against the spec's reference vectors in tests).  On a real
-cluster with spark-avro available, `sinks.writers.write_avro` would
-delegate to ``df.write.format("avro")`` instead — the public surface is
-identical.
+(verified against the spec's reference vectors in tests).
 """
 
 from __future__ import annotations

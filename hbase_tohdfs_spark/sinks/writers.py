@@ -6,18 +6,17 @@ Avro/Parquet write typed columns (nulls stay null) — the null-semantics
 split documented in SURVEY.md §1.2.
 
 Every sink is a distributed write: one part file per partition, written by
-the tasks themselves (never collected to the driver).
+the tasks themselves (never collected to the driver) and committed by
+Hadoop's output committer, so it commits on any Hadoop filesystem.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from hbase_tohdfs_spark.formats import avrolite
 from hbase_tohdfs_spark.model import ExportSchema
 from hbase_tohdfs_spark.operators.pivot import render_delimited
 
@@ -76,58 +75,42 @@ def write_avro(
 ) -> None:
     """K3: Avro container sink (``ExportHBaseTableToAvro.java:90-105``).
 
-    No spark-avro jar in this environment, so each task writes its own
-    part file through the pure-Python container codec
-    (:mod:`hbase_tohdfs_spark.formats.avrolite`).  Parallelism is
-    preserved (one file per partition, written task-side); with spark-avro
-    on the classpath this function would be `df.write.format("avro")`.
-    ``schema`` is a parsed Avro schema file (``load_schema(..., fmt="avro")``):
-    its columns are written, its record JSON heads every part file.
-
-    Codec mapping mirrors the reference args: ``gzip`` -> Avro
-    ``deflate``, ``none``/other -> ``null``; ``snappy`` works when
-    python-snappy is importable (``ExportHBaseTableToAvro.java:99-105``
-    parity) and raises a clear plan-time error otherwise.
-
-    Overwrite + commit protocol (what a Hadoop committer would do):
-    the output directory is cleared driver-side before the job — a
-    re-export can never mix old part files with new ones — and each
-    task writes to an attempt-unique temp name and renames only on
-    success, so a failed/retried/speculative attempt never leaves a
-    half-written ``part-*.avro``.  ``_SUCCESS`` is dropped last.
+    One Hive ``INSERT OVERWRITE DIRECTORY`` through AvroSerDe: tasks
+    encode in the JVM and Hadoop's committer replaces ``path`` (any Hadoop
+    filesystem URI) with the ``part-*.avro`` files and ``_SUCCESS``.
+    ``schema`` is a parsed Avro schema file (``load_schema(...,
+    fmt="avro")``): its columns are written, its record JSON heads every
+    part file.  Codecs mirror the reference args
+    (``ExportHBaseTableToAvro.java:99-105``): ``gzip`` -> ``deflate``,
+    ``none`` -> ``null``, ``snappy``; they are set on a child session, so
+    the caller's conf never sees them.  Reading snappy output back with
+    :mod:`~hbase_tohdfs_spark.formats.avrolite` needs python-snappy.
     """
     codec = {"gzip": "deflate", "none": "null"}.get(codec.lower(), codec.lower())
-    if codec == "snappy" and not avrolite.HAVE_SNAPPY:
-        # Surface avrolite's explanatory error at plan time, not in tasks.
-        raise ValueError(
-            "snappy Avro codec unavailable (needs python-snappy); use gzip/none"
+    session = typed.sparkSession.newSession()
+    session.conf.set("hive.exec.compress.output", str(codec != "null").lower())
+    session.conf.set("avro.output.codec", codec)
+    session.conf.set("hive.output.file.extension", ".avro")
+    view = f"avro_export_{uuid.uuid4().hex}"
+    typed.select(*schema.columns).createGlobalTempView(view)
+    try:
+        session.sql(
+            f"INSERT OVERWRITE DIRECTORY {_sql_str(path)}"
+            " ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.avro.AvroSerDe'"
+            " WITH SERDEPROPERTIES"
+            f" ('avro.schema.literal'={_sql_str(json.dumps(schema.avro_json))})"
+            " STORED AS"
+            " INPUTFORMAT 'org.apache.hadoop.hive.ql.io.avro.AvroContainerInputFormat'"
+            " OUTPUTFORMAT 'org.apache.hadoop.hive.ql.io.avro.AvroContainerOutputFormat'"
+            f" SELECT * FROM global_temp.{view}"
         )
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    os.makedirs(path)
-    frame = typed.select(*schema.columns)
+    finally:
+        session.catalog.dropGlobalTempView(view)
 
-    def _write_part(idx: int, rows):
-        final = os.path.join(path, f"part-{idx:05d}.avro")
-        tmp = f"{final}.tmp-{uuid.uuid4().hex}"
-        n = avrolite.write_container(
-            tmp, schema.avro_json, (row.asDict() for row in rows), codec=codec
-        )
-        if n == 0:
-            os.remove(tmp)  # match MR behavior: no empty part files kept
-            return
-        os.replace(tmp, final)  # atomic publish; last successful attempt wins
-        yield (idx, n)
 
-    # Materialize: the mapPartitions write happens task-side; count() just
-    # forces execution and returns per-part record counts to the driver.
-    frame.rdd.mapPartitionsWithIndex(_write_part).count()
-    # Sweep any temp leftovers from failed attempts, then commit.
-    for name in os.listdir(path):
-        if ".tmp-" in name:
-            os.remove(os.path.join(path, name))
-    # _SUCCESS marker for parity with Hadoop committers.
-    open(os.path.join(path, "_SUCCESS"), "w").close()
+def _sql_str(text: str) -> str:
+    """``text`` as a Spark SQL string literal."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def write_parquet(typed: DataFrame, path: str, codec: str = "snappy") -> None:

@@ -30,11 +30,11 @@ def _avro_paths(path: str) -> list[str]:
 def read_avro(spark: SparkSession, path: str, reader_schema_json: str | None = None) -> DataFrame:
     """S3: Avro container(s) -> DataFrame.
 
-    Decoding runs distributed: ``binaryFiles`` ships each part file to a
-    task which streams records through the avrolite codec.  An optional
+    ``path`` is one container file or a directory of ``*.avro`` parts.
+    ``binaryFiles`` ships each part to a task, which decodes it with
+    avrolite, a decoder independent of the JVM writer.  An optional
     external *reader schema* projects/renames like ``AvroReader``'s
-    schema argument (``AvroReader.java:32-36``).  With spark-avro on the
-    classpath this would be ``spark.read.format("avro")``.
+    schema argument (``AvroReader.java:32-36``).
     """
     parts = _avro_paths(path)
     file_schema = avrolite.read_schema(parts[0])

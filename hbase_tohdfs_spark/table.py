@@ -51,7 +51,10 @@ def create_table(
 
 
 def table_meta(path: str) -> dict:
-    with open(os.path.join(path, _META_FILE), encoding="utf-8") as fh:
+    meta = os.path.join(path, _META_FILE)
+    if not os.path.exists(meta):
+        raise FileNotFoundError(f"no {meta}: run CreateTable on {path} first")
+    with open(meta, encoding="utf-8") as fh:
         return json.load(fh)
 
 
@@ -63,13 +66,11 @@ def write_cells(
     ``repartitionByRange(num_regions, row_key)`` is the
     TotalOrderPartitioner analogue (``PopulateTable.java:68``);
     ``sortWithinPartitions(row_key, qualifier, ts)`` matches HBase's cell
-    ordering so downstream scans see rows contiguously.
+    ordering so downstream scans see rows contiguously.  ``num_regions``
+    defaults to the count :func:`create_table` recorded.
     """
     if num_regions is None:
-        try:
-            num_regions = table_meta(path).get("num_regions", 4)
-        except FileNotFoundError:
-            num_regions = 4
+        num_regions = table_meta(path)["num_regions"]
     (
         cells.repartitionByRange(num_regions, "row_key")
         .sortWithinPartitions("row_key", "qualifier", "ts")

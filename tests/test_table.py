@@ -27,6 +27,16 @@ def test_write_read_roundtrip(spark, cells, tmp_path_factory):
     assert table.table_meta(path)["num_regions"] == 4
 
 
+def test_populate_table_never_created_names_create_table(spark, tmp_path):
+    from hbase_tohdfs_spark import cli
+
+    tbl = tmp_path / "never_created"
+    argv = ["PopulateTable", "1", "10", str(tmp_path / "gen"), str(tbl), "c", "r"]
+    with pytest.raises(FileNotFoundError, match="CreateTable"):
+        cli.main(argv, spark=spark)
+    assert not tbl.exists()
+
+
 def test_bucketed_pivot_is_shuffle_free(spark, cells):
     """groupBy(row_key) over a row_key-bucketed scan must not shuffle:
     the bucket spec satisfies the aggregation's required distribution."""
