@@ -22,10 +22,12 @@ Layout:
     operators/text.py   lang-id, quality, token count, fingerprints
     operators/multimodal.py binary columns + Pandas-UDF feature plumbing
     functions/codec.py  HBase Bytes.toInt/toLong big-endian decode exprs
+    hadoop.py           driver-side Hadoop FileSystem helpers; the AvroSerDe clause
     sinks/writers.py    text/csv(+gzip), SequenceFile, Avro, Parquet sinks
-    sources/readers.py  Avro/Parquet readers with limit (AvroReader.java)
+    sources/readers.py  Avro (Hive AvroSerDe)/Parquet readers with limit (AvroReader.java)
     sources/schema_file.py CSV + Avro schema-file readers
-    formats/avrolite.py pure-Python Avro container codec (no spark-avro jar)
+    formats/avrolite.py pure-Python Avro container codec, the independent
+                        decoder that checks the JVM's Avro output
     streaming/pivot_stream.py Structured Streaming pivot over event streams
 """
 

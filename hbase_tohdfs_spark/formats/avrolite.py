@@ -1,10 +1,11 @@
 """Minimal pure-Python Avro Object Container File codec.
 
 This environment has neither the spark-avro connector jar nor a Python
-avro library.  The Avro sink (reference surface K3,
-``ExportHBaseTableToAvro.java``) writes in the JVM through Hive's
-AvroSerDe; this module is the source side (S3, ``AvroReader.java``) and
-the independent decoder that checks what the JVM writes.  It implements
+avro library.  The Avro sink and source (reference surfaces K3 and S3,
+``ExportHBaseTableToAvro.java``, ``AvroReader.java``) both run in the
+JVM through Hive's AvroSerDe; this module is the independent decoder
+that checks what the JVM writes (the tests, the CLI walkthrough and
+perfbench's codec rates).  It implements
 the *public* Avro 1.x container spec
 (https://avro.apache.org/docs/current/specification/): header magic
 ``Obj\\x01``, a metadata map holding ``avro.schema`` / ``avro.codec``, a

@@ -12,11 +12,11 @@ Hadoop's output committer, so it commits on any Hadoop filesystem.
 
 from __future__ import annotations
 
-import json
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hbase_tohdfs_spark import hadoop
 from hbase_tohdfs_spark.model import ExportSchema
 from hbase_tohdfs_spark.operators.pivot import render_delimited
 
@@ -95,22 +95,12 @@ def write_avro(
     typed.select(*schema.columns).createGlobalTempView(view)
     try:
         session.sql(
-            f"INSERT OVERWRITE DIRECTORY {_sql_str(path)}"
-            " ROW FORMAT SERDE 'org.apache.hadoop.hive.serde2.avro.AvroSerDe'"
-            " WITH SERDEPROPERTIES"
-            f" ('avro.schema.literal'={_sql_str(json.dumps(schema.avro_json))})"
-            " STORED AS"
-            " INPUTFORMAT 'org.apache.hadoop.hive.ql.io.avro.AvroContainerInputFormat'"
-            " OUTPUTFORMAT 'org.apache.hadoop.hive.ql.io.avro.AvroContainerOutputFormat'"
+            f"INSERT OVERWRITE DIRECTORY {hadoop.sql_str(path)}"
+            f" {hadoop.avro_storage(schema.avro_json)}"
             f" SELECT * FROM global_temp.{view}"
         )
     finally:
         session.catalog.dropGlobalTempView(view)
-
-
-def _sql_str(text: str) -> str:
-    """``text`` as a Spark SQL string literal."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def write_parquet(typed: DataFrame, path: str, codec: str = "snappy") -> None:

@@ -22,10 +22,10 @@ reuses the storage partitioning and skips its shuffle.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hbase_tohdfs_spark import hadoop
 from hbase_tohdfs_spark.model import CELL_SCHEMA
 
 _META_FILE = "_kv_table.json"
@@ -37,6 +37,8 @@ def create_table(
     """DDL: create an empty KV dataset with table metadata.
 
     Mirrors ``CreateTable {table} {cf} {regions}`` (``CreateTable.java:20``).
+    ``path`` is a path or any Hadoop URI; the metadata file is written
+    through Hadoop ``FileSystem`` next to the empty Parquet dataset.
     """
     empty = spark.createDataFrame([], CELL_SCHEMA)
     empty.write.mode("errorifexists").parquet(path)
@@ -46,16 +48,16 @@ def create_table(
         "compression": "snappy",
         "version": 1,
     }
-    with open(os.path.join(path, _META_FILE), "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
+    hadoop.write_text(spark, f"{path}/{_META_FILE}", json.dumps(meta))
 
 
-def table_meta(path: str) -> dict:
-    meta = os.path.join(path, _META_FILE)
-    if not os.path.exists(meta):
-        raise FileNotFoundError(f"no {meta}: run CreateTable on {path} first")
-    with open(meta, encoding="utf-8") as fh:
-        return json.load(fh)
+def table_meta(spark: SparkSession, path: str) -> dict:
+    """The metadata :func:`create_table` recorded for the table at ``path``."""
+    meta = f"{path}/{_META_FILE}"
+    try:
+        return json.loads(hadoop.read_text(spark, meta))
+    except FileNotFoundError:
+        raise FileNotFoundError(f"no {meta}: run CreateTable on {path} first") from None
 
 
 def write_cells(
@@ -70,7 +72,7 @@ def write_cells(
     defaults to the count :func:`create_table` recorded.
     """
     if num_regions is None:
-        num_regions = table_meta(path)["num_regions"]
+        num_regions = table_meta(cells.sparkSession, path)["num_regions"]
     (
         cells.repartitionByRange(num_regions, "row_key")
         .sortWithinPartitions("row_key", "qualifier", "ts")

@@ -1,11 +1,13 @@
-"""The Avro sink (K3): one Hive ``INSERT OVERWRITE DIRECTORY`` through
-AvroSerDe, read back by the independent avrolite decoder."""
+"""The Avro sink (K3) and source (S3): one Hive ``INSERT OVERWRITE
+DIRECTORY`` through AvroSerDe, read back both by the independent avrolite
+decoder and by ``read_avro``'s Hive external table over the same SerDe."""
 
 from __future__ import annotations
 
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -49,7 +51,8 @@ def test_codec_per_call_does_not_leak(spark, tmp_path, codec, file_codec):
     assert spark.conf.get("hive.exec.compress.output", None) is None
 
 
-def test_every_model_type_round_trips_with_quoted_schema(spark, tmp_path):
+@pytest.mark.parametrize("codec", ["gzip", "none", "snappy"])
+def test_every_model_type_round_trips_with_quoted_schema(spark, tmp_path, codec):
     """The schema literal is spliced into SQL: a ``doc`` holding ``'`` and
     ``\\`` must reach the file header unchanged."""
     schema = parse_avro_schema_json(
@@ -79,7 +82,7 @@ def test_every_model_type_round_trips_with_quoted_schema(spark, tmp_path):
     ]
     out = tmp_path / "out"
     frame = spark.createDataFrame(rows, schema.struct)
-    writers.write_avro(frame, str(out), schema, "gzip")
+    writers.write_avro(frame, str(out), schema, codec)
     assert all(_header(p)[0] == schema.avro_json for p in _parts(out))
     got = readers.read_avro(spark, str(out)).collect()
     assert sorted(tuple(r) for r in got) == sorted(rows)
@@ -94,6 +97,85 @@ def test_file_uri_lands_under_the_path(spark, tmp_path, monkeypatch):
     writers.write_avro(frame, out.as_uri(), LONG_SCHEMA)
     assert os.listdir(cwd) == []
     assert readers.read_avro(spark, str(out)).count() == 10
+    assert readers.read_avro(spark, out.as_uri()).count() == 10
+    assert os.listdir(cwd) == []
+
+
+def test_each_part_file_reads_on_its_own(spark, tmp_path):
+    """A single part file is the reference's own form (``AvroReader
+    {dataFile}``); the parts' counts add up to the directory's."""
+    out = tmp_path / "out"
+    frame = spark.range(0, 100, 1, 3).selectExpr("id AS l")
+    writers.write_avro(frame, str(out), LONG_SCHEMA)
+    parts = _parts(out)
+    assert len(parts) == 3
+    counts = [readers.read_avro(spark, p).count() for p in parts]
+    assert all(counts) and sum(counts) == readers.read_avro(spark, str(out)).count()
+
+
+def test_missing_path_or_part_names_the_path(spark, tmp_path):
+    missing = tmp_path / "missing"
+    with pytest.raises(FileNotFoundError, match=re.escape(str(missing))):
+        readers.read_avro(spark, str(missing))
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError, match=re.escape(str(empty))):
+        readers.read_avro(spark, str(empty))
+
+
+def test_read_is_a_hive_avroserde_scan(spark, tmp_path):
+    out = str(tmp_path / "out")
+    writers.write_avro(spark.range(0, 5).selectExpr("id AS l"), out, LONG_SCHEMA)
+    plan = readers.read_avro(spark, out)._jdf.queryExecution().executedPlan().toString()
+    assert "Scan hive" in plan and "HiveTableRelation" in plan and "AvroSerDe" in plan
+    assert "ExistingRDD" not in plan
+
+
+def test_reader_schema_resolves_like_generic_datum_reader(spark, tmp_path):
+    """``AvroReader.java:32-36``: the reader schema projects and reorders;
+    a field the file lacks reads as its ``null`` default, and without a
+    default it fails."""
+    writer = parse_avro_schema_json(
+        json.dumps(
+            {
+                "type": "record",
+                "name": "W",
+                "fields": [
+                    {"name": "A", "type": "long"},
+                    {"name": "b", "type": "string"},
+                    {"name": "c", "type": "int"},
+                ],
+            }
+        ),
+        strict=False,
+    )
+    out = str(tmp_path / "out")
+    frame = spark.createDataFrame([(1, "x", 10), (2, "y", 20)], writer.struct)
+    writers.write_avro(frame, out, writer)
+
+    def reader(*fields):
+        return json.dumps({"type": "record", "name": "W", "fields": list(fields)})
+
+    projected = readers.read_avro(
+        spark, out, reader({"name": "c", "type": "int"}, {"name": "A", "type": "long"})
+    )
+    assert projected.columns == ["c", "A"]
+    assert sorted(map(tuple, projected.collect())) == [(10, 1), (20, 2)]
+
+    defaulted = readers.read_avro(
+        spark,
+        out,
+        reader({"name": "b", "type": "string"},
+               {"name": "d", "type": ["null", "string"], "default": None}),
+    )
+    assert sorted(map(tuple, defaulted.collect())) == [("x", None), ("y", None)]
+
+    required = readers.read_avro(
+        spark, out, reader({"name": "A", "type": "long"}, {"name": "e", "type": "string"})
+    )
+    with pytest.raises(Exception, match="missing required field"):
+        required.collect()
 
 
 def test_empty_frame_reads_back_as_zero_rows(spark, tmp_path):
@@ -113,7 +195,8 @@ with open("schema.avsc", "w") as fh:
              + ", ".join('{"name": "%s", "type": "string"}' % c for c in cols) + "]}")
 for argv in (["CreateTable", "kvtable", "c", "2"],
              ["PopulateTable", "2", "50", "gen", "kvtable", "c", "run1"],
-             ["ExportHBaseTableToAvro", "kvtable", "c", "out_avro", "gzip", "schema.avsc"]):
+             ["ExportHBaseTableToAvro", "kvtable", "c", "out_avro", "gzip", "schema.avsc"],
+             ["AvroReader", "out_avro", "schema.avsc", "3"]):
     if cli.main(argv) != 0:
         sys.exit(1)
 """
@@ -132,5 +215,6 @@ def test_cli_avro_export_leaves_no_metastore_in_cwd(spark, tmp_path):
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert readers.read_avro(spark, str(tmp_path / "out_avro")).count() == 100
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("avro_read_")]
     assert not (tmp_path / "metastore_db").exists()
     assert not (tmp_path / "derby.log").exists()

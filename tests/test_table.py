@@ -24,7 +24,7 @@ def test_write_read_roundtrip(spark, cells, tmp_path_factory):
     assert [(f.name, f.dataType) for f in got.schema.fields] == [
         (f.name, f.dataType) for f in cells.schema.fields
     ]
-    assert table.table_meta(path)["num_regions"] == 4
+    assert table.table_meta(spark, path)["num_regions"] == 4
 
 
 def test_populate_table_never_created_names_create_table(spark, tmp_path):
@@ -35,6 +35,27 @@ def test_populate_table_never_created_names_create_table(spark, tmp_path):
     with pytest.raises(FileNotFoundError, match="CreateTable"):
         cli.main(argv, spark=spark)
     assert not tbl.exists()
+
+
+def test_cli_table_and_export_on_a_file_uri(spark, tmp_path):
+    """CreateTable, PopulateTable and an export address the table by a
+    ``file://`` URI; the metadata goes through Hadoop ``FileSystem``."""
+    from hbase_tohdfs_spark import cli
+    from hbase_tohdfs_spark.sources import readers
+
+    kv, out = (tmp_path / "kv").as_uri(), (tmp_path / "out").as_uri()
+    schema = tmp_path / "schema.avsc"
+    schema.write_text(
+        '{"type": "record", "name": "T", "fields": [{"name": "C1", "type": "string"}]}'
+    )
+    for argv in (
+        ["CreateTable", kv, "c", "2"],
+        ["PopulateTable", "2", "10", (tmp_path / "gen").as_uri(), kv, "c", "r"],
+        ["ExportHBaseTableToAvro", kv, "c", out, "none", str(schema)],
+    ):
+        assert cli.main(argv, spark=spark) == 0
+    assert table.table_meta(spark, kv)["num_regions"] == 2
+    assert readers.read_avro(spark, out).count() == 20
 
 
 def test_bucketed_pivot_is_shuffle_free(spark, cells):
