@@ -16,12 +16,12 @@ CPUS_ENV = "SPARK_GRAFT_CPUS"
 
 
 def graft_cpus() -> int:
-    """Cores the local session runs on: ``$SPARK_GRAFT_CPUS`` (default
-    32), with ``*`` meaning every core of this host.  The one parse of
-    the variable, so the master URL, the shuffle width (and with it the
-    fan-out width) and the bench's recorded core count always agree.
-    Anything else that is not a positive integer raises."""
-    raw = os.environ.get(CPUS_ENV, "32").strip()
+    """Cores the local session runs on: ``$SPARK_GRAFT_CPUS``, where
+    ``*`` (and an unset variable) means every core of this host.  The
+    one parse of the variable, so the master URL, the shuffle width (and
+    with it the fan-out width) and the bench's recorded core count always
+    agree.  Anything else that is not a positive integer raises."""
+    raw = os.environ.get(CPUS_ENV, "*").strip()
     if raw == "*":
         return os.cpu_count() or 1
     if raw.isdigit() and int(raw) > 0:

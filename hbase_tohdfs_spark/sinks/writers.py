@@ -7,11 +7,13 @@ split documented in SURVEY.md §1.2.
 
 Every sink is a distributed write: one part file per partition, written by
 the tasks themselves (never collected to the driver) and committed by
-Hadoop's output committer, so it commits on any Hadoop filesystem.
+Hadoop's output committer, so it commits on any Hadoop filesystem.  Every
+sink encodes in the JVM; none starts a Python worker.
 """
 
 from __future__ import annotations
 
+import functools
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +22,7 @@ from hbase_tohdfs_spark import hadoop
 from hbase_tohdfs_spark.model import ExportSchema
 from hbase_tohdfs_spark.operators.pivot import render_delimited
 
+_SEQ_KEY_VALUE = ("org.apache.hadoop.io.Text", "org.apache.hadoop.io.NullWritable")
 _SEQ_CODECS = {
     "snappy": "org.apache.hadoop.io.compress.SnappyCodec",
     "gzip": "org.apache.hadoop.io.compress.GzipCodec",
@@ -52,19 +55,69 @@ def write_sequencefile(
     """K2: SequenceFile<Text, NullWritable> of delimited lines
     (``ExportHBaseTableToDelimiteredSeq.java:85-99,169-188``).
 
-    SequenceFile has no DataFrame writer; this is the one RDD-API sink.
-    Codec names mirror the reference: snappy / gzip / anything-else=none.
+    Runs in the JVM: the ``(line, NULL)`` string pairs go through the
+    converter PySpark's own ``saveAsSequenceFile`` uses (String ->
+    ``Text``, null -> ``NullWritable``) into Hadoop's mapred
+    ``SequenceFileOutputFormat``, whose committer writes ``path`` (a path
+    or any Hadoop URI) and raises if it exists.  An empty frame commits a
+    0-row output.  Codec names mirror the reference: snappy / gzip /
+    anything-else=none.
     """
+    jvm = wide.sparkSession.sparkContext._jvm
     lines = render_delimited(wide, columns, delimiter)
-    pairs = lines.rdd.map(lambda r: (r.line, None))
+    # Dataset.as: ``as`` is a Python keyword, hence getattr.
+    strings = getattr(lines.selectExpr("line", "CAST(NULL AS STRING)")._jdf, "as")(
+        _string_pair(jvm)
+    )
+    to_writable = jvm.org.apache.spark.api.python.JavaToWritableConverter()
+    pairs = jvm.org.apache.spark.api.python.PythonHadoopUtil.convertRDD(
+        jvm.org.apache.spark.api.java.JavaRDD.toRDD(strings.javaRDD()),
+        to_writable,
+        to_writable,
+    )
+    classes = [*_SEQ_KEY_VALUE, "org.apache.hadoop.mapred.SequenceFileOutputFormat"]
     codec_class = _SEQ_CODECS.get(codec.lower())
-    pairs.saveAsSequenceFile(path, compressionCodecClass=codec_class)
+    if codec_class:
+        classes.append(codec_class)
+    jvm.org.apache.spark.api.java.JavaPairRDD.fromJavaRDD(
+        pairs.toJavaRDD()
+    ).saveAsHadoopFile(path, *(_jclass(jvm, name) for name in classes))
 
 
 def read_sequencefile_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Read back K2 output as a one-column ``line`` frame."""
-    rdd = spark.sparkContext.sequenceFile(path).map(lambda kv: (kv[0],))
-    return spark.createDataFrame(rdd, "line: string")
+    """Read back K2 output (a path or any Hadoop URI) as a one-column
+    ``line`` frame, in the JVM: ``Text`` keys become strings through the
+    converter PySpark's own ``sequenceFile`` uses.  A directory holding
+    only ``_SUCCESS`` reads as 0 rows; a missing ``path`` raises
+    ``FileNotFoundError`` naming it."""
+    fs, qualified = hadoop.hadoop_path(spark, path)
+    if not fs.exists(qualified):
+        raise FileNotFoundError(f"no such file or directory: {path}")
+    jvm = spark.sparkContext._jvm
+    jsc = spark.sparkContext._jsc
+    writables = jsc.sc().sequenceFile(
+        path, *(_jclass(jvm, name) for name in _SEQ_KEY_VALUE)
+    )
+    conf = jsc.broadcast(
+        jvm.org.apache.spark.util.SerializableConfiguration(jsc.hadoopConfiguration())
+    )
+    to_java = jvm.org.apache.spark.api.python.WritableToJavaConverter(conf)
+    pairs = jvm.org.apache.spark.api.python.PythonHadoopUtil.convertRDD(
+        writables, to_java, to_java
+    )
+    strings = spark._jsparkSession.createDataset(pairs, _string_pair(jvm))
+    return DataFrame(strings.toDF(), spark).selectExpr("_1 AS line")
+
+
+def _string_pair(jvm):
+    """The encoder of a ``(String, String)`` tuple."""
+    encoders = jvm.org.apache.spark.sql.Encoders
+    return encoders.tuple(encoders.STRING(), encoders.STRING())
+
+
+def _jclass(jvm, name: str):
+    """The ``java.lang.Class`` of the JVM class ``name``."""
+    return functools.reduce(getattr, name.split("."), jvm)._java_lang_class
 
 
 def write_avro(

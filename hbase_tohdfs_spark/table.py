@@ -40,7 +40,12 @@ def create_table(
     ``path`` is a path or any Hadoop URI; the metadata file is written
     through Hadoop ``FileSystem`` next to the empty Parquet dataset.
     """
-    empty = spark.createDataFrame([], CELL_SCHEMA)
+    # An empty LocalRelation built in the JVM: no Python RDD, no worker.
+    jss = spark._jsparkSession
+    cells = spark.sparkContext._jvm.org.apache.spark.sql.Encoders.row(
+        jss.parseDataType(CELL_SCHEMA.json())
+    )
+    empty = DataFrame(jss.emptyDataset(cells), spark)
     empty.write.mode("errorifexists").parquet(path)
     meta = {
         "column_family": column_family,

@@ -1,5 +1,6 @@
-"""``SPARK_GRAFT_CPUS`` is parsed in one place: ``*`` means every core
-of the host, a positive integer is taken as is, anything else raises.
+"""``SPARK_GRAFT_CPUS`` is parsed in one place: ``*`` (or no variable)
+means every core of the host, a positive integer is taken as is,
+anything else raises.
 The driver heap defaults to half of physical memory, capped at 16g."""
 
 from __future__ import annotations
@@ -13,6 +14,11 @@ from hbase_tohdfs_spark.session import CPUS_ENV, driver_memory, graft_cpus
 
 def test_star_means_every_host_core(monkeypatch):
     monkeypatch.setenv(CPUS_ENV, "*")
+    assert graft_cpus() == os.cpu_count()
+
+
+def test_unset_means_every_host_core(monkeypatch):
+    monkeypatch.delenv(CPUS_ENV, raising=False)
     assert graft_cpus() == os.cpu_count()
 
 

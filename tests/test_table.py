@@ -58,6 +58,53 @@ def test_cli_table_and_export_on_a_file_uri(spark, tmp_path):
     assert readers.read_avro(spark, out).count() == 20
 
 
+# verb -> (output format, codec argument, schema file, delimiter if any)
+_EXPORTS = {
+    "ExportHBaseTableToDelimiteredTxt": ("txt", "true", "schema.csv", "|"),
+    "ExportHBaseTableToDelimiteredSeq": ("seq", "snappy", "schema.csv", "|"),
+    "ExportHBaseTableToAvro": ("avro", "gzip", "schema.avsc"),
+    "ExportHBaseTableToParquet": ("parquet", "snappy", "schema.avsc"),
+    "ExportHBaseTableToOrc": ("orc", "snappy", "schema.avsc"),
+}
+
+
+@pytest.fixture(scope="module")
+def empty_table(spark, tmp_path_factory):
+    from hbase_tohdfs_spark import cli
+
+    root = tmp_path_factory.mktemp("empty_kv")
+    (root / "schema.csv").write_text("C1,C2\n")
+    (root / "schema.avsc").write_text(
+        '{"type": "record", "name": "T", "fields": ['
+        '{"name": "C1", "type": "string"}, {"name": "C2", "type": "string"}]}'
+    )
+    assert cli.main(["CreateTable", str(root / "kv"), "c", "2"], spark=spark) == 0
+    return root
+
+
+@pytest.mark.parametrize("verb", sorted(_EXPORTS))
+def test_every_export_of_an_empty_table_reads_zero_rows(spark, empty_table, verb):
+    """An empty table (CreateTable, no PopulateTable) exports to a
+    committed, readable output of 0 rows in every format."""
+    from hbase_tohdfs_spark import cli
+    from hbase_tohdfs_spark.sinks import writers
+    from hbase_tohdfs_spark.sources import readers
+
+    fmt, codec, schema, *delimiter = _EXPORTS[verb]
+    out = str(empty_table / f"out_{fmt}")
+    argv = [verb, str(empty_table / "kv"), "c", out, codec, str(empty_table / schema)]
+    assert cli.main(argv + delimiter, spark=spark) == 0
+    assert (empty_table / f"out_{fmt}" / "_SUCCESS").exists()
+    read = {
+        "txt": lambda: spark.read.text(out),
+        "seq": lambda: writers.read_sequencefile_lines(spark, out),
+        "avro": lambda: readers.read_avro(spark, out),
+        "parquet": lambda: readers.read_parquet(spark, out),
+        "orc": lambda: readers.read_orc(spark, out),
+    }[fmt]
+    assert read().count() == 0
+
+
 def test_bucketed_pivot_is_shuffle_free(spark, cells):
     """groupBy(row_key) over a row_key-bucketed scan must not shuffle:
     the bucket spec satisfies the aggregation's required distribution."""
